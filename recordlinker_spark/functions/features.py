@@ -24,7 +24,10 @@ part of the key, but the code uses ``value[-4:]:type``
 
 from __future__ import annotations
 
+import weakref
+
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -154,18 +157,29 @@ def _first_name_raw(prepend_suffix: bool) -> Column:
     return _nonempty(F.transform(F.col("name"), per_name))
 
 
-def feature_columns(
-    records: DataFrame,
-    identifier_types: list[str] | None = None,
-    prepend_suffix: bool = True,
-) -> DataFrame:
-    """Add one ``feat_<ATTRIBUTE>`` array<string> column per feature.
+# Column trees are JVM objects built through the active SparkContext's
+# gateway, hundreds of Py4J calls per tree set; every link builds the
+# same ones several times, so they are built once per context.  Keyed
+# weakly by the context: a stopped context's trees go with it, and the
+# next context builds its own.
+_TREES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
-    :param identifier_types: extra ``feat_IDENTIFIER_<TYPE>`` columns for
-        identifier-suffix evaluators (e.g. ``IDENTIFIER:SS``).
-    :param prepend_suffix: FIRST_NAME suffix-prepending (pii.py:516-529);
-        the tuning exact matcher disables it (tuning/prob_calc.py:45-46).
-    """
+
+def _per_context(key: tuple, build):
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return build()  # raises like any column builder without a context
+    memo = _TREES.setdefault(sc, {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
+def _feature_trees(
+    identifier_types: tuple[str, ...], prepend_suffix: bool
+) -> dict[str, Column]:
+    """``feat_<ATTRIBUTE>`` name -> its array<string> column over the PII
+    columns (unaliased)."""
     name, address, telecom = F.col("name"), F.col("address"), F.col("telecom")
 
     raw: dict[str, Column] = {}
@@ -235,7 +249,7 @@ def feature_columns(
         "COUNTY",
         "PHONE",
     }
-    cols = [records["*"]]
+    cols: dict[str, Column] = {}
     for attr in FEATURE_ATTRIBUTES:
         if attr == "IDENTIFIER":
             continue
@@ -259,9 +273,7 @@ def feature_columns(
         # and bypass the missingness gate (size(NULL) is NULL, so
         # blocking's when(size <= 0) charges no missing-odds yet omits
         # the key from the subset)
-        cols.append(
-            F.coalesce(col, F.array().cast("array<string>")).alias(f"feat_{attr}")
-        )
+        cols[f"feat_{attr}"] = F.coalesce(col, F.array().cast("array<string>"))
 
     # IDENTIFIER composite: norm(value):norm(authority):type (pii.py:564-568)
     idents = F.col("identifiers")
@@ -276,29 +288,62 @@ def feature_columns(
         ),
         lambda val, rest: F.concat(val, F.lit(":"), rest),
     )
-    cols.append(
-        F.coalesce(ident_composite, F.array().cast("array<string>")).alias(
-            "feat_IDENTIFIER"
-        )
+    cols["feat_IDENTIFIER"] = F.coalesce(
+        ident_composite, F.array().cast("array<string>")
     )
     # per-type columns: align the composite with the (parallel) type
     # array — equality in the lambda, never split()/regexp (HOF perf
     # note in sources/ingest.py)
     types_arr = F.transform(idents, lambda i: i["type"])
-    for typ in identifier_types or []:
-        cols.append(
-            F.coalesce(
-                F.array_compact(
-                    F.zip_with(
-                        ident_composite,
-                        types_arr,
-                        lambda c, t: F.when(t == typ, c),
-                    )
-                ),
-                F.array().cast("array<string>"),
-            ).alias(f"feat_IDENTIFIER_{typ}")
+    for typ in identifier_types:
+        cols[f"feat_IDENTIFIER_{typ}"] = F.coalesce(
+            F.array_compact(
+                F.zip_with(
+                    ident_composite,
+                    types_arr,
+                    lambda c, t: F.when(t == typ, c),
+                )
+            ),
+            F.array().cast("array<string>"),
         )
-    return records.select(*cols)
+    return cols
+
+
+def _trees(identifier_types: tuple[str, ...], prepend_suffix: bool) -> dict[str, Column]:
+    return _per_context(
+        ("trees", identifier_types, prepend_suffix),
+        lambda: _feature_trees(identifier_types, prepend_suffix),
+    )
+
+
+def feature_exprs(
+    identifier_types: list[str] | tuple[str, ...] | None = None,
+    prepend_suffix: bool = True,
+) -> list[Column]:
+    """The aliased ``feat_*`` columns over the PII columns, built once
+    per SparkContext (see :func:`feature_columns` for the parameters)."""
+    types = tuple(identifier_types or ())
+    return _per_context(
+        ("feat", types, prepend_suffix),
+        lambda: [c.alias(n) for n, c in _trees(types, prepend_suffix).items()],
+    )
+
+
+def feature_columns(
+    records: DataFrame,
+    identifier_types: list[str] | None = None,
+    prepend_suffix: bool = True,
+) -> DataFrame:
+    """Add one ``feat_<ATTRIBUTE>`` array<string> column per feature.
+
+    :param identifier_types: extra ``feat_IDENTIFIER_<TYPE>`` columns for
+        identifier-suffix evaluators (e.g. ``IDENTIFIER:SS``).
+    :param prepend_suffix: FIRST_NAME suffix-prepending (pii.py:516-529);
+        the tuning exact matcher disables it (tuning/prob_calc.py:45-46).
+    """
+    return records.select(
+        records["*"], *feature_exprs(identifier_types, prepend_suffix)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -324,33 +369,59 @@ def _bk_identifier() -> Column:
     )
 
 
-BLOCKING_KEY_EXPRS: dict[str, str] = {
-    # key -> SQL expression over the feat_* columns ('' = column builder)
-    "BIRTHDATE": "feat_BIRTHDATE",
-    "SEX": "feat_SEX",
-    "ZIP": "feat_ZIP",
-    "FIRST_NAME": "transform(feat_FIRST_NAME, x -> left(x, 4))",
-    "LAST_NAME": "transform(feat_LAST_NAME, x -> left(x, 4))",
-    "ADDRESS": "transform(feat_ADDRESS, x -> left(x, 4))",
-    "PHONE": "transform(feat_PHONE, x -> right(x, 4))",
-    "EMAIL": "transform(feat_EMAIL, x -> left(x, 4))",
+def _left4(x: Column) -> Column:
+    return F.left(x, F.lit(4))
+
+
+# key -> (the feature it is cut from, per-value cut; None = whole value)
+BLOCKING_KEY_CUTS: dict[str, tuple] = {
+    "BIRTHDATE": ("BIRTHDATE", None),
+    "SEX": ("SEX", None),
+    "ZIP": ("ZIP", None),
+    "FIRST_NAME": ("FIRST_NAME", _left4),
+    "LAST_NAME": ("LAST_NAME", _left4),
+    "ADDRESS": ("ADDRESS", _left4),
+    "PHONE": ("PHONE", lambda x: F.right(x, F.lit(4))),
+    "EMAIL": ("EMAIL", _left4),
 }
+ALL_BLOCKING_KEYS = (*BLOCKING_KEY_CUTS, "IDENTIFIER")
+
+
+def blocking_key_exprs(keys: list[str] | None = None, from_pii: bool = False) -> list[Column]:
+    """The aliased ``bk_<KEY>`` columns, built once per SparkContext.
+
+    :param from_pii: derive each key straight from the PII columns
+        (inlining its feature) instead of from the ``feat_*`` columns,
+        so a projection can carry features of one record version and
+        keys of another."""
+    keys = tuple(keys or ALL_BLOCKING_KEYS)
+
+    def build() -> list[Column]:
+        feature = _trees((), True).__getitem__ if from_pii else F.col
+        cols = []
+        for key in keys:
+            if key == "IDENTIFIER":
+                col = _bk_identifier()
+            else:
+                attr, cut = BLOCKING_KEY_CUTS[key]
+                col = feature(f"feat_{attr}")
+                if cut is not None:
+                    col = F.transform(col, cut)
+            # same array-contract enforcement as feature_columns: bk_* is
+            # never NULL, so the missingness gate's size() test is sound
+            cols.append(
+                F.coalesce(
+                    F.array_distinct(col), F.array().cast("array<string>")
+                ).alias(f"bk_{key}")
+            )
+        return cols
+
+    return _per_context(("bk", keys, from_pii), build)
 
 
 def blocking_key_columns(feats: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Add one ``bk_<KEY>`` array<string> (distinct values) per blocking key."""
-    keys = keys or (list(BLOCKING_KEY_EXPRS) + ["IDENTIFIER"])
-    cols = [feats["*"]]
-    for key in keys:
-        col = _bk_identifier() if key == "IDENTIFIER" else F.expr(BLOCKING_KEY_EXPRS[key])
-        # same array-contract enforcement as feature_columns: bk_* is
-        # never NULL, so the missingness gate's size() test is sound
-        cols.append(
-            F.coalesce(
-                F.array_distinct(col), F.array().cast("array<string>")
-            ).alias(f"bk_{key}")
-        )
-    return feats.select(*cols)
+    return feats.select(feats["*"], *blocking_key_exprs(keys))
 
 
 def explode_blocking_values(df: DataFrame, keys: list[str]) -> DataFrame:

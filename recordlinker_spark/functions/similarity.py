@@ -55,35 +55,20 @@ _PAIR_MEMO_CAP = 2_000_000
 
 
 @functools.lru_cache(maxsize=16)
-def multi_max_similarity_udf(measures: tuple[str, ...], ablation: bool = False):
+def multi_max_similarity_udf(measures: tuple[str, ...]):
     """One Arrow round-trip for a whole pass: 2N array<string> columns
     (left/right per fuzzy evaluator) -> array<double> of max
     cross-product similarities (NULL element = missing side).
 
     A pass with N fuzzy evaluators would otherwise pay N pandas-UDF
-    transfers of the same pair rows; this fuses them into one.
-
-    ``ablation=True`` returns 1.0 for every non-missing pair WITHOUT
-    calling the kernels (the Arrow transfer and row loop still run) —
-    the measurement hook that attributes scaling residue to the
-    similarity kernels vs the surrounding plan (scripts/bench_scaling)."""
+    transfers of the same pair rows; this fuses them into one."""
     fns = [SIMILARITY_FUNCS[m] for m in measures]
     n = len(measures)
-    if ablation:
-        fns = [lambda x, y: 1.0 for _ in measures]
 
     @pandas_udf(T.ArrayType(T.DoubleType()))
     def _udf(*cols: pd.Series) -> pd.Series:
         caches: list[dict] = []
         for m in measures:
-            if ablation:
-                # never touch the worker-global memo with ablation
-                # constants: workers are reused across jobs in one app,
-                # and a poisoned (measure, pair) -> 1.0 entry would be
-                # served to later REAL scoring UDFs.  Throwaway local
-                # dict instead (still dedupes within this batch).
-                caches.append({})
-                continue
             cache = _PAIR_MEMO.setdefault(m, {})
             if len(cache) > _PAIR_MEMO_CAP:
                 cache.clear()

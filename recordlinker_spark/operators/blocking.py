@@ -45,7 +45,6 @@ algorithm, not the engine — capping is the standard mitigation).
 
 from __future__ import annotations
 
-import dataclasses
 from itertools import combinations
 
 from pyspark.sql import Column, DataFrame
@@ -54,15 +53,6 @@ from pyspark.sql import functions as F
 from recordlinker_spark.config import Algorithm, AlgorithmPass
 
 SEP = "\x1f"  # composite-key separator; blocking values are <=20 printable chars
-
-
-@dataclasses.dataclass
-class BlockingStats:
-    """Skew-handling census results, for metrics checkpointing (A9)."""
-
-    pass_label: str
-    hot_values: int = 0
-    capped_values: int = 0
 
 
 def _bk(key: str) -> Column:
@@ -145,6 +135,7 @@ def blocked_persons(
     probe_count: int | None = None,
     broadcast_probe_rows: int = 250_000,
     subsets: list[tuple[str, ...]] | None = None,
+    exploded_probe_rows: int | None = None,
 ) -> DataFrame:
     """J1+J2: distinct ``(record_id_l, person_id)`` candidate clusters.
 
@@ -169,6 +160,9 @@ def blocked_persons(
     :param subsets: precomputed present-key subsets for this pass
         (skips the per-pass driver collect — link_batch fuses every
         pass's subset discovery into ONE job over the cached keys).
+    :param exploded_probe_rows: known composite probe row count over
+        ``subsets`` (skips the broadcast gate's count; link_batch takes
+        it in the same fused job).
 
     Broadcast fast path: an MPI-linkage batch is typically orders of
     magnitude smaller than the MPI, so the probe side's composite rows
@@ -229,9 +223,11 @@ def blocked_persons(
     # ≤ broadcast_probe_rows batch) and bail to the salted path when
     # the explosion breaches 2x the bound, so the driver never collects
     # a broadcast the ~15 MB estimate didn't cover.
-    exploded_rows = (
-        probe.count() if probe_count <= broadcast_probe_rows else None
-    )
+    exploded_rows = None
+    if probe_count <= broadcast_probe_rows:
+        exploded_rows = (
+            probe.count() if exploded_probe_rows is None else exploded_probe_rows
+        )
     if exploded_rows is not None and exploded_rows <= 2 * broadcast_probe_rows:
         if max_block_size is not None:
             if mpi_count is None:

@@ -66,23 +66,26 @@ def cluster_scores(
     for ev in algorithm_pass.evaluators:
         map_args.append(F.lit(ev.feature))
         map_args.append(F.col("median_" + fs_col(ev.feature)[3:]))
-    out = (
+    # one projection after the aggregate, not a withColumn chain: each
+    # withColumn analyses the whole pass plan again
+    rms = F.col("median_points") / F.lit(max_points)
+    return (
         scored_pairs.groupBy("record_id_l", "person_id")
         .agg(*aggs)
-        .withColumn("median_features", F.create_map(*map_args))
-        .withColumn("rms", F.col("median_points") / F.lit(max_points))
-        .withColumn(
-            "grade",
-            F.when(F.col("rms") < F.lit(mmt), F.lit("certainly-not"))
-            .when(F.col("rms") < F.lit(cmt), F.lit("possible"))
-            .otherwise(F.lit("certain")),
+        .select(
+            "*",
+            F.create_map(*map_args).alias("median_features"),
+            rms.alias("rms"),
+            F.when(rms < F.lit(mmt), F.lit("certainly-not"))
+            .when(rms < F.lit(cmt), F.lit("possible"))
+            .otherwise(F.lit("certain"))
+            .alias("grade"),
+            F.lit(algorithm_pass.resolved_label).alias("pass_label"),
+            F.lit(mmt).alias("mmt"),
+            F.lit(cmt).alias("cmt"),
         )
-        .withColumn("pass_label", F.lit(algorithm_pass.resolved_label))
-        .withColumn("mmt", F.lit(mmt))
-        .withColumn("cmt", F.lit(cmt))
         .filter(F.col("rms") >= F.lit(mmt))
     )
-    return out
 
 
 def fold_passes(per_pass_results: list[DataFrame]) -> DataFrame:
@@ -108,9 +111,9 @@ def fold_passes(per_pass_results: list[DataFrame]) -> DataFrame:
         rank.desc(), F.col("rms").desc(), F.col("pass_label")
     )
     return (
-        unioned.withColumn("_rn", F.row_number().over(w))
+        unioned.select(*common, F.row_number().over(w).alias("_rn"))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .select(*common)
     )
 
 
@@ -137,40 +140,36 @@ def decide(
     w = Window.partitionBy("record_id_l").orderBy(
         rank.desc(), F.col("rms").desc(), F.col("person_id")
     )
-    ranked = folded.withColumn("_rn", F.row_number().over(w))
-
-    best = ranked.filter(F.col("_rn") == 1).select(
-        "record_id_l",
+    best = folded.select(
+        F.col("record_id_l").alias("record_id"),
         F.col("grade").alias("final_grade"),
         F.col("person_id").alias("matched_person_id"),
         F.col("rms").alias("best_rms"),
         F.col("pass_label").alias("matching_pass_label"),
-    )
+        F.row_number().over(w).alias("_rn"),
+    ).filter(F.col("_rn") == 1)
 
     # deterministic new-person label (the reference mints an opaque uuid,
     # link.py:329-331; determinism here buys idempotent resume + oracles)
     mint = F.concat(F.lit("p-"), F.md5(F.concat(F.lit("person:"), F.col("record_id"))))
+    grade = F.coalesce(F.col("final_grade"), F.lit("certainly-not"))
     decisions = (
         incoming.select(F.col("record_id"))
-        .join(best.withColumnRenamed("record_id_l", "record_id"), "record_id", "left")
-        .withColumn("final_grade", F.coalesce("final_grade", F.lit("certainly-not")))
-        .withColumn(
-            "person_id",
-            F.when(F.col("final_grade") == "certain", F.col("matched_person_id"))
-            .when(F.col("final_grade") == "possible", F.lit(None).cast("string"))
-            .otherwise(mint),
-        )
+        .join(best, "record_id", "left")
         .select(
             "record_id",
-            "final_grade",
-            "person_id",
+            grade.alias("final_grade"),
+            F.when(grade == "certain", F.col("matched_person_id"))
+            .when(grade == "possible", F.lit(None).cast("string"))
+            .otherwise(mint)
+            .alias("person_id"),
             "best_rms",
             "matching_pass_label",
         )
     )
 
     any_certain = F.max(rank).over(Window.partitionBy("record_id_l"))
-    results = folded.withColumn("_best_rank", any_certain).filter(
+    results = folded.select("*", any_certain.alias("_best_rank")).filter(
         (F.col("grade") == "certain")
         | ((F.col("grade") == "possible") & (F.col("_best_rank") < 2))
     )

@@ -29,17 +29,15 @@ semantics on small fixtures see plans/replay.py.
 
 from __future__ import annotations
 
+import concurrent.futures
 import dataclasses
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from recordlinker_spark.config import Algorithm
-from recordlinker_spark.functions.features import (
-    blocking_key_columns,
-    feature_columns,
-)
-from recordlinker_spark.operators.blocking import candidate_pairs
+from recordlinker_spark.functions.features import blocking_key_exprs, feature_columns
+from recordlinker_spark.operators.blocking import candidate_pairs, missingness_filter
 from recordlinker_spark.operators.decide import cluster_scores  # noqa: F401 (re-export)
 from recordlinker_spark.operators.decide import decide, fold_passes
 from recordlinker_spark.operators.scoring import (
@@ -74,8 +72,13 @@ class LinkOutput:
         """Release the projections link_batch cached for this call.
         Callers that invoke link_batch in a loop (replay harness) MUST
         call this after consuming the outputs, or cached frames
-        accumulate in the block manager across iterations."""
-        for df in self.cached:
+        accumulate in the block manager across iterations.
+
+        Dependents go first: uncaching a frame makes Spark re-plan
+        every still-cached plan built on it (seconds per cached
+        decisions plan), while a frame with no cached dependents is
+        dropped at once."""
+        for df in reversed(self.cached):
             df.unpersist()
         self.cached.clear()
 
@@ -111,36 +114,99 @@ def _all_blocking_keys(algorithm: Algorithm) -> list[str]:
     return seen
 
 
-def prepare_incoming(records: DataFrame, algorithm: Algorithm) -> tuple[DataFrame, DataFrame]:
-    """(scoring features from RAW record, blocking keys from CLEANED record)."""
-    id_types = _identifier_types(algorithm)
-    keys = _all_blocking_keys(algorithm)
-    feats_raw = feature_columns(records.select(*PII_COLS), id_types)
-    cleaned = remove_skip_values(records.select(*PII_COLS), algorithm.context.skip_values)
-    bk_cleaned = blocking_key_columns(feature_columns(cleaned), keys).select(
-        "record_id", *[f"bk_{k}" for k in keys]
+def _feature_names(algorithm: Algorithm) -> list[str]:
+    """The ``feat_*`` columns the algorithm's evaluators score."""
+    return sorted(
+        {feature_col(e.feature) for p in algorithm.passes for e in p.evaluators}
     )
-    return feats_raw, bk_cleaned
+
+
+def incoming_side(records: DataFrame, algorithm: Algorithm) -> DataFrame:
+    """``record_id``, scoring features (``feat_*``) from the RAW record and
+    blocking keys (``bk_*``) from the skip-CLEANED record, as one linear
+    projection chain: features first, then the scrub rewrites the PII
+    columns in place, then the keys are cut from the scrubbed ones."""
+    raw = feature_columns(records.select(*PII_COLS), _identifier_types(algorithm))
+    cleaned = remove_skip_values(raw, algorithm.context.skip_values)
+    return cleaned.select(
+        "record_id",
+        *_feature_names(algorithm),
+        *blocking_key_exprs(_all_blocking_keys(algorithm), from_pii=True),
+    )
+
+
+def mpi_side(patients: DataFrame, algorithm: Algorithm) -> DataFrame:
+    """``record_id``, ``person_id``, blocking keys from the RAW record
+    and scoring features from the skip-CLEANED record: the mirror image
+    of :func:`incoming_side`, over linkable patients only.
+
+    :param patients: pii columns + ``person_id`` (NULL = pending review,
+        excluded from blocking).
+    """
+    keys = _all_blocking_keys(algorithm)
+    raw = patients.filter(F.col("person_id").isNotNull()).select(
+        *PII_COLS, "person_id", *blocking_key_exprs(keys, from_pii=True)
+    )
+    cleaned = remove_skip_values(raw, algorithm.context.skip_values)
+    return feature_columns(cleaned, _identifier_types(algorithm)).select(
+        "record_id", "person_id", *[f"bk_{k}" for k in keys], *_feature_names(algorithm)
+    )
+
+
+def _split(side: DataFrame, algorithm: Algorithm, *ids: str) -> tuple[DataFrame, DataFrame]:
+    keys = _all_blocking_keys(algorithm)
+    return (
+        side.select("record_id", *_feature_names(algorithm)),
+        side.select(*ids, *[f"bk_{k}" for k in keys]),
+    )
+
+
+def prepare_incoming(records: DataFrame, algorithm: Algorithm) -> tuple[DataFrame, DataFrame]:
+    """(scoring features from RAW record, blocking keys from CLEANED
+    record): two projections of :func:`incoming_side`."""
+    return _split(incoming_side(records, algorithm), algorithm, "record_id")
 
 
 def prepare_mpi(patients: DataFrame, algorithm: Algorithm) -> tuple[DataFrame, DataFrame]:
-    """(scoring features from CLEANED record, blocking keys from RAW record).
+    """(scoring features from CLEANED record, blocking keys + ``person_id``
+    from RAW record): two projections of :func:`mpi_side`."""
+    return _split(mpi_side(patients, algorithm), algorithm, "record_id", "person_id")
 
-    :param patients: pii columns + ``person_id``.
-    """
-    id_types = _identifier_types(algorithm)
-    keys = _all_blocking_keys(algorithm)
-    linkable = patients.filter(F.col("person_id").isNotNull())
-    cleaned = remove_skip_values(
-        linkable.select(*PII_COLS, "person_id"), algorithm.context.skip_values
+
+def _subsets_and_rows(inc: DataFrame, algorithm: Algorithm):
+    """Every pass's present-key subsets, the composite probe rows they
+    explode to, and the incoming row count, from ONE driver job over
+    the incoming keys.
+
+    A record with present keys S yields prod(|bk_k|, k in S) composite
+    rows (operators/blocking.py composite_values); absent keys count 1.
+    Returns ({pass index: sorted subsets}, {pass index: probe rows},
+    incoming rows)."""
+    frame = inc.select(
+        F.lit(-1).alias("_p"), F.lit("").alias("_subset"), F.lit(1).cast("long").alias("_rows")
     )
-    feats_cleaned = feature_columns(cleaned.select(*PII_COLS), id_types)
-    bk_raw = blocking_key_columns(
-        feature_columns(linkable.select(*PII_COLS)), keys
-    ).select("record_id", *[f"bk_{k}" for k in keys])
-    return feats_cleaned, bk_raw.join(
-        linkable.select("record_id", "person_id"), "record_id"
-    )
+    for i, p in enumerate(algorithm.passes):
+        rows = None
+        for k in p.blocking_keys:
+            n = F.greatest(F.size(F.col(f"bk_{k}")), F.lit(1)).cast("long")
+            rows = n if rows is None else rows * n
+        frame = frame.unionByName(
+            missingness_filter(inc, algorithm, p).select(
+                F.lit(i).alias("_p"), "_subset", rows.alias("_rows")
+            )
+        )
+    subsets: dict[int, list] = {i: [] for i in range(len(algorithm.passes))}
+    probe_rows: dict[int, int] = {i: 0 for i in subsets}
+    total = 0
+    for r in frame.groupBy("_p", "_subset").agg(F.sum("_rows").alias("_rows")).collect():
+        if r["_p"] < 0:
+            total = r["_rows"]
+        elif r["_subset"]:
+            subsets[r["_p"]].append(tuple(r["_subset"].split(",")))
+            probe_rows[r["_p"]] += r["_rows"]
+    for i in subsets:
+        subsets[i].sort()
+    return subsets, probe_rows, total
 
 
 def link_batch(
@@ -149,7 +215,6 @@ def link_batch(
     algorithm: Algorithm,
     keep_pair_scores: bool = False,
     cache_intermediate: bool = False,
-    cache_feats: bool = True,
     **block_kwargs,
 ) -> LinkOutput:
     """Link a batch of incoming PII records against the MPI.
@@ -159,77 +224,52 @@ def link_batch(
     :param mpi_patients: pii columns + ``person_id`` (NULL = pending
         review, excluded from blocking).
     """
-    inc_feats, inc_bk = prepare_incoming(incoming, algorithm)
-    mpi_feats, mpi_bk = prepare_mpi(mpi_patients, algorithm)
+    inc = incoming_side(incoming, algorithm)
+    mpi = mpi_side(mpi_patients, algorithm)
     cached: list = []
+    probe_rows_by_pass: dict[int, int] = {}
     if len(algorithm.passes) > 1 or cache_intermediate:
         # every pass re-joins these projections; without a cache each
         # pass would re-run span parsing + feature extraction over the
         # whole MPI (the widest scan in the job)
-        inc_bk = inc_bk.cache()
-        mpi_bk = mpi_bk.cache()
-        cached += [inc_bk, mpi_bk]
-        warm_list = [mpi_bk, inc_bk]
-        if cache_feats:
-            # feats caching is a trade: it avoids re-extracting features
-            # per pass but pays a wide-array materialization barrier up
-            # front; with parsed records already cached, recomputing the
-            # (pure-expression) extraction inside the join pipeline can
-            # be cheaper — callers with expensive upstream sources keep
-            # the default
-            inc_feats = inc_feats.cache()
-            mpi_feats = mpi_feats.cache()
-            cached += [inc_feats, mpi_feats]
-            warm_list += [mpi_feats, inc_feats]
+        inc = inc.cache()
+        mpi = mpi.cache()
+        cached += [inc, mpi]
         # materialize the cached projections BEFORE the pass threads
         # fork: concurrent first-touch of an unmaterialized cache makes
         # every branch compute all partitions (in-flight cache work
         # doesn't dedupe), duplicating the widest scans of the job
-        # exactly when parallelism is highest.  The counts are
-        # independent jobs submitted from threads, so the warm-up
-        # itself uses the whole cluster; the known MPI count then
-        # spares blocked_persons a counting pass per pass.
-        import concurrent.futures as _cf
-
-        with _cf.ThreadPoolExecutor(max_workers=4) as warm:
-            counts = list(warm.map(lambda df: df.count(), warm_list))
-        block_kwargs.setdefault("mpi_count", counts[0])
-        block_kwargs.setdefault("probe_count", counts[1])
-
-        # fuse every pass's present-key subset discovery into ONE
-        # driver job over the (just warmed) cached keys: each pass
-        # would otherwise pay its own distinct+collect round-trip —
-        # fixed, non-scaling driver latency x |passes|
-        from recordlinker_spark.operators.blocking import missingness_filter
-
-        if "subsets_by_pass" not in block_kwargs:
-            sub_frame = None
-            for i, p in enumerate(algorithm.passes):
-                mf = missingness_filter(inc_bk, algorithm, p).select(
-                    F.lit(i).alias("_p"), "_subset"
-                ).distinct()
-                sub_frame = mf if sub_frame is None else sub_frame.unionByName(mf)
-            subsets_by_pass: dict[int, list] = {
-                i: [] for i in range(len(algorithm.passes))
-            }
-            for r in sub_frame.collect():
-                if r["_subset"]:
-                    subsets_by_pass[r["_p"]].append(tuple(r["_subset"].split(",")))
-            for i in subsets_by_pass:
-                subsets_by_pass[i].sort()
-            block_kwargs["subsets_by_pass"] = subsets_by_pass
+        # exactly when parallelism is highest.  Two independent jobs,
+        # submitted from threads so the warm-up uses the whole
+        # cluster: the MPI count, and ONE job over the incoming keys
+        # that finds every pass's present-key subsets, their exploded
+        # probe rows and the incoming count — per pass, these would
+        # each be a driver round-trip of fixed, non-scaling latency.
+        # The known counts spare blocked_persons its counting jobs.
+        with concurrent.futures.ThreadPoolExecutor(max_workers=2) as warm:
+            mpi_count = warm.submit(mpi.count)
+            if "subsets_by_pass" in block_kwargs:
+                probe_count = warm.submit(inc.count).result()
+            else:
+                subsets, probe_rows_by_pass, probe_count = warm.submit(
+                    _subsets_and_rows, inc, algorithm
+                ).result()
+                block_kwargs["subsets_by_pass"] = subsets
+            block_kwargs.setdefault("mpi_count", mpi_count.result())
+        block_kwargs.setdefault("probe_count", probe_count)
 
     subsets_by_pass = block_kwargs.pop("subsets_by_pass", None)
     pass_index = {id(p): i for i, p in enumerate(algorithm.passes)}
 
     def build_pass(algorithm_pass):
         kw = dict(block_kwargs)
+        i = pass_index[id(algorithm_pass)]
         if subsets_by_pass is not None:
-            kw["subsets"] = subsets_by_pass[pass_index[id(algorithm_pass)]]
-        pairs = candidate_pairs(
-            inc_bk, mpi_bk, algorithm, algorithm_pass, **kw
-        )
-        with_feats = attach_pair_features(pairs, inc_feats, mpi_feats, algorithm_pass)
+            kw["subsets"] = subsets_by_pass[i]
+        if i in probe_rows_by_pass:
+            kw["exploded_probe_rows"] = probe_rows_by_pass[i]
+        pairs = candidate_pairs(inc, mpi, algorithm, algorithm_pass, **kw)
+        with_feats = attach_pair_features(pairs, inc, mpi, algorithm_pass)
         scored = score_pairs(with_feats, algorithm, algorithm_pass)
         if cache_intermediate:
             # one blocking+scoring computation shared by the cluster
@@ -245,8 +285,6 @@ def link_batch(
     # (A merged all-pass blocking plan with a cache barrier was
     # measured SLOWER at 4N executors: the barrier serializes blocking
     # against scoring and costs more than the saved stages.)
-    import concurrent.futures
-
     with concurrent.futures.ThreadPoolExecutor(max_workers=4) as pool:
         scored_per_pass = list(pool.map(build_pass, algorithm.passes))
 
@@ -254,11 +292,12 @@ def link_batch(
     all_scored: DataFrame | None = None
     for algorithm_pass, scored in zip(algorithm.passes, scored_per_pass):
         if keep_pair_scores:
-            labeled = scored.withColumn(
-                "pass_label", F.lit(algorithm_pass.resolved_label)
-            )
-            sel = labeled.select(
-                "record_id_l", "person_id", "record_id_r", "pass_label", "score"
+            sel = scored.select(
+                "record_id_l",
+                "person_id",
+                "record_id_r",
+                F.lit(algorithm_pass.resolved_label).alias("pass_label"),
+                "score",
             )
             all_scored = sel if all_scored is None else all_scored.unionByName(sel)
         per_pass.append(cluster_scores(scored, algorithm, algorithm_pass))

@@ -167,8 +167,7 @@ def score_pairs(
         measures = tuple(
             e.fuzzy_match_measure or ctx.fuzzy_match_measure for e in fuzzy
         )
-        ablation = os.environ.get("SPARK_GRAFT_SIM_ABLATION", "") == "kernel"
-        udf = multi_max_similarity_udf(measures, ablation)
+        udf = multi_max_similarity_udf(measures)
         argnames = []
         for e in fuzzy:
             key = e.feature.replace(":", "_")
@@ -209,7 +208,9 @@ def score_pairs(
         for i, e in enumerate(fuzzy):
             sims[e.feature] = F.element_at(F.col("_sims"), i + 1)
 
-    score_cols: list[Column] = []
+    # one projection for every evaluator score and the gated total: a
+    # withColumn per column would analyse the whole pair plan again each
+    scores: dict[str, Column] = {}
     missing_terms: list[Column] = []
     for ev in algorithm_pass.evaluators:
         key = ev.feature.replace(":", "_")
@@ -218,15 +219,16 @@ def score_pairs(
             s, m = fuzzy_score_expr(ev, ctx, left, right, sims[ev.feature])
         else:
             s, m = evaluator_score(ev, algorithm, left, right)
-        out = out.withColumn(fs_col(ev.feature), s)
-        score_cols.append(F.col(fs_col(ev.feature)))
+        scores[fs_col(ev.feature)] = s
         log_odds = ctx.get_log_odds(ev.feature) or 0.0
         missing_terms.append(F.when(m, F.lit(log_odds)).otherwise(F.lit(0.0)))
 
-    out = out.withColumn(
-        "score", gated_total(score_cols, missing_terms, ctx, max_points)
+    names = [fs_col(e.feature) for e in algorithm_pass.evaluators]
+    total = gated_total([scores[n] for n in names], missing_terms, ctx, max_points)
+    return out.select(
+        "record_id_l",
+        "person_id",
+        "record_id_r",
+        total.alias("score"),
+        *[scores[n].alias(n) for n in names],
     )
-    keep = ["record_id_l", "person_id", "record_id_r", "score"] + [
-        fs_col(e.feature) for e in algorithm_pass.evaluators
-    ]
-    return out.select(*keep)

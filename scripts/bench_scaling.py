@@ -116,11 +116,10 @@ else:
 incoming = incoming.cache(); mpi = mpi.cache()
 n_inc = incoming.count(); n_mpi = mpi.count()
 alg = dibbs_default()
-cache_feats = os.environ.get("SPARK_GRAFT_CACHE_FEATS", "0") == "1"
 
 def run():
     out = link_batch(incoming, mpi, alg, keep_pair_scores=True,
-                     cache_intermediate=True, cache_feats=cache_feats)
+                     cache_intermediate=True)
     n_pairs = out.pair_scores.count()
     n_dec = out.decisions.count()
     return n_pairs, n_dec

@@ -1,6 +1,5 @@
 """Regression tests for round-4 fixes: minhash permutation wrapping,
-ablation memo isolation, broadcast-gate explosion bail, parquet
-dynamic-overwrite contract."""
+broadcast-gate explosion bail, parquet dynamic-overwrite contract."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -31,27 +30,6 @@ def test_minhash_agreement_tracks_jaccard(spark):
     # lies in [10, 48] with overwhelming probability — the broken
     # implementation returns exactly 0 or exactly 64
     assert 10 <= agree <= 48, f"bimodal signature agreement: {agree}/64"
-
-
-def test_ablation_does_not_poison_memo(spark):
-    """An ablation-mode UDF run must not leave 1.0 constants in the
-    worker-global pair memo that later real scoring reads."""
-    from recordlinker_spark.functions.similarity import (
-        multi_max_similarity_udf,
-    )
-
-    df = spark.createDataFrame(
-        [(["jonathan"], ["jnathan"])] * 50,
-        "l array<string>, r array<string>",
-    ).repartition(1)  # one partition -> one python worker sees both runs
-    udf_abl = multi_max_similarity_udf(("JaroWinkler",), True)
-    abl = df.select(udf_abl("l", "r").alias("s")).collect()
-    assert all(r["s"][0] == 1.0 for r in abl)
-    udf_real = multi_max_similarity_udf(("JaroWinkler",), False)
-    real = df.select(udf_real("l", "r").alias("s")).collect()
-    # jw("jonathan","jnathan") is high but NOT 1.0; a poisoned memo
-    # would return exactly 1.0
-    assert all(0.9 < r["s"][0] < 1.0 for r in real)
 
 
 def test_broadcast_gate_bails_on_exploded_probe(spark):
@@ -178,13 +156,20 @@ def test_overwrite_partitions_parquet_contract(spark, tmp_path):
 
 
 def test_subsets_precomputed_matches_discovered(spark):
-    """blocked_persons(subsets=...) equals the self-discovered path."""
+    """blocked_persons(subsets=...) equals the self-discovered path, and
+    link_batch's fused discovery finds those subsets, probe rows and the
+    incoming count."""
     from recordlinker_spark.config import dibbs_default
     from recordlinker_spark.operators.blocking import (
         blocked_persons,
+        composite_values,
         missingness_filter,
     )
-    from recordlinker_spark.operators.linkjob import prepare_incoming, prepare_mpi
+    from recordlinker_spark.operators.linkjob import (
+        _subsets_and_rows,
+        prepare_incoming,
+        prepare_mpi,
+    )
     from recordlinker_spark.schemas import DOCUMENTS_SCHEMA
     from recordlinker_spark.sources.ingest import parse_documents
     from recordlinker_spark.sources.spandoc import docs_to_rows
@@ -203,6 +188,8 @@ def test_subsets_precomputed_matches_discovered(spark):
     mpi = recs.withColumn("person_id", F.col("record_id"))
     _, mpi_bk = prepare_mpi(mpi, alg)
 
+    fused_subsets, fused_rows, fused_total = _subsets_and_rows(inc_bk, alg)
+    assert fused_total == inc_bk.count() == len(SIX_PATIENTS)
     for p in alg.passes:
         discovered = blocked_persons(inc_bk, mpi_bk, alg, p)
         subs = sorted(
@@ -218,6 +205,16 @@ def test_subsets_precomputed_matches_discovered(spark):
         pre = blocked_persons(inc_bk, mpi_bk, alg, p, subsets=subs)
         assert sorted(map(tuple, discovered.collect())) == sorted(
             map(tuple, pre.collect())
+        )
+        # link_batch's fused job finds the same subsets, the
+        # composite probe rows the broadcast gate would count, and the
+        # incoming row count
+        i = alg.passes.index(p)
+        assert fused_subsets[i] == subs
+        tagged = missingness_filter(inc_bk, alg, p)
+        assert fused_rows[i] == sum(
+            composite_values(tagged.filter(F.col("_subset") == ",".join(s)), s).count()
+            for s in subs
         )
 
 
