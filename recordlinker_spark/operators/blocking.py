@@ -23,15 +23,15 @@ Spark-first design, chosen for 100 TB scale
 A naive translation would join a long-format ``(key, value)`` table
 once per key and intersect — but low-cardinality keys (SEX!) make
 per-key joins quadratically hot.  Because J1 is a *conjunction*, we
-instead join once per distinct present-key *subset* on a composite
-key: the cross-product of the record's values over its present keys,
-concatenated.  Selectivity is then the product of the key
+instead join on a composite key tagged with the record's present-key
+*subset*: the cross-product of the record's values over its present
+keys, concatenated.  Selectivity is then the product of the key
 selectivities (e.g. birthdate x identifier-last4 x sex), never a
 single hot key.  The number of distinct subsets is bounded by
-2^|keys| (<= 16 for every shipped config) and in practice 1-3, so the
-driver loop is tiny; each iteration is one equi-join Catalyst plans
-freely (broadcast when the incoming batch is small, shuffle-hash
-otherwise, AQE skew splitting on).
+2^|keys| (<= 16 for every shipped config) and in practice 1-3; every
+subset of a pass shares one equi-join Catalyst plans freely
+(broadcast when the incoming batch is small, shuffle-hash otherwise,
+AQE skew splitting on).
 
 Residual skew (one birthdate shared by thousands of records) is
 handled *explicitly* on top of AQE: a block-size census over the MPI
@@ -45,7 +45,8 @@ algorithm, not the engine — capping is the standard mitigation).
 
 from __future__ import annotations
 
-from itertools import combinations
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -59,16 +60,40 @@ def _bk(key: str) -> Column:
     return F.col(f"bk_{key}")
 
 
-def eligible_subsets(keys: tuple[str, ...]) -> list[tuple[str, ...]]:
-    """All non-empty subsets of the pass keys, as sorted tuples.
+def _present(k: str) -> Column:
+    # coalesce(size, 0): bk_* columns are contractually non-NULL
+    # (features.py enforces it), but defend anyway — size(NULL) is NULL
+    # under ANSI, which would charge no missing-odds for an absent key
+    # while also omitting it from the subset (phantom candidate blocks)
+    return F.coalesce(F.size(_bk(k)), F.lit(0)) > 0
 
-    Sorted WITHIN each tuple to match missingness_filter's ``_subset``
-    tags (comma-joined sorted key names) — an unsorted tuple fed to
-    ``blocked_persons(subsets=...)`` would match no census rows."""
-    out: list[tuple[str, ...]] = []
-    for r in range(1, len(keys) + 1):
-        out.extend(tuple(sorted(c)) for c in combinations(keys, r))
-    return out
+
+def missingness_keep(algorithm: Algorithm, algorithm_pass: AlgorithmPass) -> Column:
+    """J2's keep condition over the ``bk_*`` columns: the record's
+    missing keys carry at most ``max_missing_allowed_proportion`` of the
+    pass's log-odds (mpi_service.py:46-70); never true when the pass
+    total is 0."""
+    ctx = algorithm.context
+    keys = algorithm_pass.blocking_keys
+    odds = {k: ctx.get_log_odds(k) or 0.0 for k in keys}
+    total = sum(odds.values())
+    if total == 0:
+        return F.lit(False)
+    missing = None
+    for k in keys:
+        term = F.when(~_present(k), F.lit(odds[k])).otherwise(F.lit(0.0))
+        missing = term if missing is None else missing + term
+    return (missing / F.lit(total)) <= F.lit(ctx.max_missing_allowed_proportion)
+
+
+def present_subset(keys: tuple[str, ...]) -> Column:
+    """The record's present-key subset tag: the comma-joined sorted
+    names of the keys it has values for."""
+    return F.concat_ws(
+        ",", F.array_compact(F.array(*[
+            F.when(_present(k), F.lit(k)) for k in sorted(keys)
+        ]))
+    )
 
 
 def missingness_filter(
@@ -77,49 +102,30 @@ def missingness_filter(
     """J2: drop records whose missing blocking keys carry too much
     log-odds weight (mpi_service.py:46-70). Adds ``_subset``: the
     comma-joined sorted list of present keys."""
-    ctx = algorithm.context
-    keys = algorithm_pass.blocking_keys
-    odds = {k: ctx.get_log_odds(k) or 0.0 for k in keys}
-    total = sum(odds.values())
-    if total == 0:
-        return df.filter(F.lit(False)).withColumn("_subset", F.lit(""))
-    # coalesce(size, 0): bk_* columns are contractually non-NULL
-    # (features.py enforces it), but defend anyway — size(NULL) is NULL
-    # under ANSI, which would charge no missing-odds for an absent key
-    # while also omitting it from the subset (phantom candidate blocks)
-    def _sz(k: str) -> Column:
-        return F.coalesce(F.size(_bk(k)), F.lit(0))
+    return df.filter(missingness_keep(algorithm, algorithm_pass)).withColumn(
+        "_subset", present_subset(algorithm_pass.blocking_keys)
+    )
 
-    missing = None
+
+def _composite_blocks(
+    side: DataFrame, ids: list[Column | str], keys: tuple[str, ...],
+    subsets: list[tuple[str, ...]],
+) -> DataFrame:
+    """``ids``, ``_sub`` and one ``_block`` row per combination of the
+    row's values over the keys of its ``_sub`` subset.
+
+    One ``explode`` per pass key: a key in the row's subset explodes
+    its values, any other key explodes ``array(NULL)``, which
+    ``concat_ws`` skips."""
+    out = side
     for k in keys:
-        term = F.when(_sz(k) <= 0, F.lit(odds[k])).otherwise(F.lit(0.0))
-        missing = term if missing is None else missing + term
-    present = F.concat_ws(
-        ",", F.array_compact(F.array(*[
-            F.when(_sz(k) > 0, F.lit(k)) for k in sorted(keys)
-        ]))
-    )
-    return (
-        df.withColumn("_missing_odds", missing)
-        .filter(
-            (F.col("_missing_odds") / F.lit(total))
-            <= F.lit(ctx.max_missing_allowed_proportion)
+        in_subset = F.col("_sub").isin(*[",".join(s) for s in subsets if k in s])
+        values = F.when(in_subset, _bk(k)).otherwise(
+            F.array(F.lit(None).cast("string"))
         )
-        .withColumn("_subset", present)
-        .drop("_missing_odds")
-    )
-
-
-def composite_values(df: DataFrame, subset: tuple[str, ...]) -> DataFrame:
-    """Explode the cross-product of blocking values over ``subset`` into
-    a ``_block`` composite-key column (one row per combination)."""
-    out = df
-    for k in subset:
-        out = out.filter(F.size(_bk(k)) > 0).withColumn(
-            f"_v_{k}", F.explode(_bk(k))
-        )
-    block = F.concat_ws(SEP, *[F.col(f"_v_{k}") for k in subset])
-    return out.withColumn("_block", block).drop(*[f"_v_{k}" for k in subset])
+        out = out.select("*", F.explode(values).alias(f"_v_{k}"))
+    block = F.concat_ws(SEP, *[F.col(f"_v_{k}") for k in keys])
+    return out.select(*ids, "_sub", block.alias("_block"))
 
 
 def blocked_persons(
@@ -139,14 +145,18 @@ def blocked_persons(
 ) -> DataFrame:
     """J1+J2: distinct ``(record_id_l, person_id)`` candidate clusters.
 
-    Plan shape: every present-key subset's composite values are unioned
-    into ONE tagged ``(_sub, _block)`` frame per side, so the whole
-    pass is a single equi-join on ``(_sub, _block)`` — one exchange,
-    one dropDuplicates — instead of one join (and one skew census)
-    per subset.  Driver actions per pass are exactly two small jobs:
-    the subset collect and the unified census; profiling showed the
-    per-subset census alone cost a fixed ~0.6s x |subsets| x passes
-    of non-scaling driver time.
+    Plan shape: each side is ONE scan producing tagged ``(_sub, _block)``
+    rows, so the whole pass is a single equi-join on ``(_sub, _block)``
+    — one exchange, one dropDuplicates, one skew census — whatever the
+    number of present-key subsets.  A probe row carries its own
+    ``_subset`` tag; a build row is exploded into the tag of every
+    subset whose keys it has.  Both sides then run one ``explode`` per
+    pass key and one ``concat_ws``: a key outside the row's subset
+    explodes as ``array(NULL)``, which ``concat_ws`` skips, so each
+    row yields the cross-product of its values over its subset's keys.
+    A union of one branch per subset (the earlier shape) re-ran the
+    side's projection once per subset: the bootstrap's edges plan
+    had 24 scans of its cached records instead of 12.
 
     :param incoming: records with ``record_id`` + ``bk_<KEY>`` columns
         (computed from the skip-cleaned record, link.py:224).
@@ -157,9 +167,10 @@ def blocked_persons(
     :param probe_count: known incoming row count (same caller shortcut).
     :param broadcast_probe_rows: incoming batches at or below this many
         records take the broadcast fast path — see below.
-    :param subsets: precomputed present-key subsets for this pass
-        (skips the per-pass driver collect — link_batch fuses every
-        pass's subset discovery into ONE job over the cached keys).
+    :param subsets: precomputed present-key subsets for this pass, as
+        sorted tuples (skips the per-pass driver collect — link_batch
+        fuses every pass's subset discovery into ONE job over the
+        cached keys).
     :param exploded_probe_rows: known composite probe row count over
         ``subsets`` (skips the broadcast gate's count; link_batch takes
         it in the same fused job).
@@ -196,22 +207,23 @@ def blocked_persons(
 
     mpi_bk = mpi.select("record_id", "person_id", *[f"bk_{k}" for k in keys])
 
-    probe: DataFrame | None = None
-    build: DataFrame | None = None
-    for subset in subsets:
-        tag = ",".join(subset)
-        p = composite_values(
-            inc.filter(F.col("_subset") == tag), subset
-        ).select(
-            F.col("record_id").alias("record_id_l"),
-            F.lit(tag).alias("_sub"),
-            "_block",
-        )
-        b = composite_values(mpi_bk, subset).select(
-            "person_id", F.lit(tag).alias("_sub"), "_block"
-        )
-        probe = p if probe is None else probe.unionByName(p)
-        build = b if build is None else build.unionByName(b)
+    # one composite scan per side: a probe row keeps its own subset tag,
+    # a build row takes the tag of every subset whose keys it has
+    tags = [",".join(s) for s in subsets]
+    exploded_keys = tuple(k for k in sorted(keys) if any(k in s for s in subsets))
+    probe = _composite_blocks(
+        inc.filter(F.col("_subset").isin(*tags)).withColumnRenamed("_subset", "_sub"),
+        [F.col("record_id").alias("record_id_l")], exploded_keys, subsets,
+    )
+    build_tags = F.array_compact(F.array(*[
+        F.when(reduce(operator.and_, [_present(k) for k in s]), F.lit(tag))
+        for s, tag in zip(subsets, tags)
+    ]))
+    build = _composite_blocks(
+        mpi_bk.select("person_id", *[_bk(k) for k in exploded_keys],
+                      F.explode(build_tags).alias("_sub")),
+        ["person_id"], exploded_keys, subsets,
+    )
 
     # ---- small-probe fast path: broadcast-hash join, exchange-free.
     if probe_count is None:

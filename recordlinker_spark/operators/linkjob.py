@@ -37,7 +37,11 @@ from pyspark.sql import functions as F
 
 from recordlinker_spark.config import Algorithm
 from recordlinker_spark.functions.features import blocking_key_exprs, feature_columns
-from recordlinker_spark.operators.blocking import candidate_pairs, missingness_filter
+from recordlinker_spark.operators.blocking import (
+    candidate_pairs,
+    missingness_keep,
+    present_subset,
+)
 from recordlinker_spark.operators.decide import cluster_scores  # noqa: F401 (re-export)
 from recordlinker_spark.operators.decide import decide, fold_passes
 from recordlinker_spark.operators.scoring import (
@@ -176,25 +180,30 @@ def prepare_mpi(patients: DataFrame, algorithm: Algorithm) -> tuple[DataFrame, D
 def _subsets_and_rows(inc: DataFrame, algorithm: Algorithm):
     """Every pass's present-key subsets, the composite probe rows they
     explode to, and the incoming row count, from ONE driver job over
-    the incoming keys.
+    ONE projection of the incoming keys.
 
-    A record with present keys S yields prod(|bk_k|, k in S) composite
-    rows (operators/blocking.py composite_values); absent keys count 1.
-    Returns ({pass index: sorted subsets}, {pass index: probe rows},
-    incoming rows)."""
-    frame = inc.select(
+    Each record explodes into a ``(pass, subset, rows)`` struct per pass
+    whose missingness gate keeps it, plus one count row.  A record with
+    present keys S yields prod(|bk_k|, k in S) composite rows; absent
+    keys count 1.  Returns ({pass index: sorted subsets}, {pass index:
+    probe rows}, incoming rows)."""
+    entries = [F.struct(
         F.lit(-1).alias("_p"), F.lit("").alias("_subset"), F.lit(1).cast("long").alias("_rows")
-    )
+    )]
     for i, p in enumerate(algorithm.passes):
         rows = None
         for k in p.blocking_keys:
             n = F.greatest(F.size(F.col(f"bk_{k}")), F.lit(1)).cast("long")
             rows = n if rows is None else rows * n
-        frame = frame.unionByName(
-            missingness_filter(inc, algorithm, p).select(
-                F.lit(i).alias("_p"), "_subset", rows.alias("_rows")
-            )
-        )
+        entries.append(F.when(
+            missingness_keep(algorithm, p),
+            F.struct(
+                F.lit(i).alias("_p"),
+                present_subset(p.blocking_keys).alias("_subset"),
+                rows.alias("_rows"),
+            ),
+        ))
+    frame = inc.select(F.inline(F.array_compact(F.array(*entries))))
     subsets: dict[int, list] = {i: [] for i in range(len(algorithm.passes))}
     probe_rows: dict[int, int] = {i: 0 for i in subsets}
     total = 0
@@ -303,13 +312,15 @@ def link_batch(
         per_pass.append(cluster_scores(scored, algorithm, algorithm_pass))
 
     folded = fold_passes(per_pass)
+    # the record ids come from the cached side: ``incoming`` would be
+    # parsed again for them
     decisions, results = decide(
-        folded, incoming, algorithm.context.include_multiple_matches
+        folded, inc, algorithm.context.include_multiple_matches
     )
     # decisions is ONE narrow row per incoming record, yet every other
     # output hangs off it — without this cache a caller consuming
-    # decisions and then new_patients (the streaming sink and job_link
-    # both do, per micro-batch/run) re-executes the entire
+    # decisions and then new_patients (replay does, per record)
+    # re-executes the entire
     # blocking+scoring+fold+decide pipeline for the second action.
     # Caching the tiny end frame costs one materialization of rows the
     # first action computes anyway.

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from recordlinker_spark.config import SkipValue
+from recordlinker_spark.functions.features import _per_context
 
 # feature attributes a '*' rule fans out to (skip_values.py:47-130)
 _ALL_ATTRS = (
@@ -72,9 +73,18 @@ def _matches(col: Column, values: list[str]) -> Column:
 
 def remove_skip_values(records: DataFrame, skips: tuple[SkipValue, ...]) -> DataFrame:
     """Return records with skip values blanked (same schema)."""
+    # the scrub's Column trees cost ~2k Py4J calls to build; they are
+    # built once per SparkContext, like the feature trees
+    cols = _per_context(("skip", skips), lambda: _scrub_columns(skips))
+    return records.withColumns(cols) if cols else records
+
+
+def _scrub_columns(skips: tuple[SkipValue, ...]) -> dict[str, Column]:
+    """PII column name -> its scrubbed Column, for the columns ``skips``
+    touch."""
     rules = _collect(skips)
     if not rules:
-        return records
+        return {}
 
     def scrub_str(col: Column, attr: str, null: bool = False) -> Column:
         vals = rules.get(attr)
@@ -208,4 +218,4 @@ def remove_skip_values(records: DataFrame, skips: tuple[SkipValue, ...]) -> Data
 
         cols["identifiers"] = F.transform(F.col("identifiers"), scrub_ident)
 
-    return records.withColumns(cols)
+    return cols

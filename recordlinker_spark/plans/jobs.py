@@ -228,39 +228,35 @@ def job_link(spark: SparkSession, args, persist: bool = True) -> None:
         docs_df = spark.read.parquet(args.documents)
         records = parse_documents(docs_df)
     mpi = _read_mpi_t(spark, target)
-    # cache_intermediate only when a SECOND consumer of the
-    # blocking+scoring DAG exists (the MPI append and/or the FHIR
-    # enrichment's records join); a match dry-run writes decisions once
-    # and would pay the cache for nothing
-    out = link_batch(
-        records, mpi, _algorithm(args),
-        cache_intermediate=persist or fhir_mode,
-    )
+    out = link_batch(records, mpi, _algorithm(args))
     try:
         out.decisions.write.mode("overwrite").parquet(args.out)
-        if fhir_mode:
-            # per-bundle response rows: grade, person, Person-enriched
-            # bundle (NULL when no person, like the reference response).
-            # Read the decisions back from what was just written — one
-            # pipeline execution feeds both outputs.
-            enrich_bundles(
-                bundles, spark.read.parquet(args.out), records
-            ).write.mode("overwrite").parquet(args.out.rstrip("/") + ".fhir")
-        if persist:
-            new_patients = out.new_patients
-            if not fhir_mode:
-                # attach here, at the append, like the --run-dir and
-                # streaming paths: only the MPI insert needs the column
-                new_patients = attach_external_person_id(
-                    new_patients, docs_df
-                )
-            target.append(mpi_projection(new_patients))
     finally:
         # release even when a write raises: a long-lived driver that
         # catches and retries would otherwise accumulate cached
         # MPI-sized projections per attempt (same rationale as the
         # streaming sink's finally in streaming/incremental.py)
         out.unpersist()
+    # every further output reads the decisions back from what was just
+    # written: one pipeline execution feeds them all, each plans over a
+    # file scan instead of the link's lineage, and the MPI receives
+    # exactly the committed decisions
+    decisions = spark.read.parquet(args.out)
+    if fhir_mode:
+        # per-bundle response rows: grade, person, Person-enriched
+        # bundle (NULL when no person, like the reference response)
+        enrich_bundles(bundles, decisions, records).write.mode(
+            "overwrite"
+        ).parquet(args.out.rstrip("/") + ".fhir")
+    if persist:
+        new_patients = records.join(
+            decisions.select("record_id", "person_id"), "record_id"
+        )
+        if not fhir_mode:
+            # attach here, at the append, like the --run-dir and
+            # streaming paths: only the MPI insert needs the column
+            new_patients = attach_external_person_id(new_patients, docs_df)
+        target.append(mpi_projection(new_patients))
 
 
 def _job_link_checkpointed(

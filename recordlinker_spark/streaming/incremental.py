@@ -207,6 +207,10 @@ class IncrementalLinker:
             .isEmpty()
         ):
             return
+        # parse the batch once: the link's cached incoming side and the
+        # MPI append both read these records
+        records = records.cache()
+        batch_dir = self._batch_dir(batch_id)
         try:
             # the sink is the longest-running loop caller of link_batch:
             # the with-block releases every micro-batch's cached
@@ -221,16 +225,25 @@ class IncrementalLinker:
                 # between the two writes) REPLACES its own partial
                 # output instead of appending a second copy; readers
                 # see batch_id as a partition column
-                out.decisions.write.mode("overwrite").parquet(
-                    self._batch_dir(batch_id)
-                )
-                # same external_person_id passthrough as the batch CLI
-                # paths — the stream must not be the one insert mode
-                # that silently writes NULL external ids
-                mpi_projection(
-                    attach_external_person_id(out.new_patients, batch_docs)
-                ).write.mode("append").parquet(self.mpi_dir)
+                out.decisions.write.mode("overwrite").parquet(batch_dir)
+            # the append joins the records onto the decisions just
+            # committed, not onto the link's lineage: it plans over a
+            # file scan, and the MPI receives exactly what the
+            # decisions partition holds.  Same external_person_id
+            # passthrough as the batch CLI paths — the stream must not
+            # be the one insert mode that silently writes NULL
+            # external ids
+            committed = self.spark.read.parquet(batch_dir)
+            new_patients = records.join(
+                committed.select("record_id", "person_id"), "record_id"
+            )
+            mpi_projection(
+                attach_external_person_id(new_patients, batch_docs)
+            ).write.mode("append").parquet(self.mpi_dir)
         finally:
+            # after link_batch's caches, which are built on it: dropping
+            # an input first makes Spark re-plan its cached dependents
+            records.unpersist()
             # unpersist() can't reach everything: the salted blocking
             # path localCheckpoints its sampled census
             # (operators/blocking.py), and checkpoint blocks are only

@@ -5,6 +5,8 @@ assertions of tests/unit/database/test_mpi_service.py:396-780 onto the
 batch blocking operator (J1-J4).
 """
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -223,3 +225,100 @@ def test_salted_capped_and_broadcast_paths_agree(spark):
         census_fraction=1.0, max_block_size=50,
     )
     assert capped_b == capped_s == {("q2", "pc5")}
+
+
+# (record_id, person_id, BIRTHDATE, FIRST_NAME, IDENTIFIER) blocking
+# values: m0 has every key, so its build rows fall in every subset;
+# m6-m9 share one (BIRTHDATE, FIRST_NAME) block of four rows, which a
+# cap of 3 drops while q5 keeps its other block, through m10
+PARITY_KEYS = ("BIRTHDATE", "FIRST_NAME", "IDENTIFIER")
+PARITY_ODDS = {"BIRTHDATE": 10.0, "FIRST_NAME": 6.0, "IDENTIFIER": 8.0}
+PARITY_MPI = [
+    ("m0", "p1", ["1980-01-01"], ["JOHN", "BILL"], ["1234:MR", "9999:SS"]),
+    ("m1", "p1", ["1980-01-01"], ["JOHN"], []),
+    ("m2", "p2", ["1980-01-01"], ["JOHN"], ["5555:MR"]),
+    ("m3", "p3", [], ["BILL"], ["9999:SS"]),
+    ("m4", "p4", ["1975-02-02"], ["JOHN", "TALI"], ["1234:MR"]),
+    ("m5", "p5", ["1980-01-01"], [], []),
+] + [(f"m{i}", f"p{i}", ["1990-09-09"], ["ANNA"], []) for i in range(6, 10)] + [
+    ("m10", "p10", ["1990-09-09"], ["JOHN"], []),
+]
+PARITY_INCOMING = [
+    ("q0", ["1980-01-01"], ["JOHN", "BILL"], ["1234:MR", "9999:SS"]),
+    ("q1", ["1980-01-01"], ["JOHN"], []),
+    ("q2", [], ["BILL", "TALI"], ["9999:SS", "1234:MR"]),
+    ("q3", [], [], ["1234:MR"]),  # missing odds 16/24: the gate drops it
+    ("q4", ["1990-09-09"], ["ANNA"], []),
+    ("q5", ["1990-09-09"], ["ANNA", "JOHN"], []),
+    ("q6", [], [], []),
+]
+
+
+def _reference_blocked(max_missing, cap=None):
+    """Brute-force J1+J2: a kept record's candidates are the persons of
+    every MPI row holding, for each key the record has, one of its
+    values — per combination of the record's values, dropping a
+    combination matched by more than ``cap`` MPI rows."""
+    total = sum(PARITY_ODDS.values())
+    out = set()
+    for rid, *vals in PARITY_INCOMING:
+        rec = dict(zip(PARITY_KEYS, vals))
+        present = [k for k in PARITY_KEYS if rec[k]]
+        missing = sum(PARITY_ODDS[k] for k in PARITY_KEYS if not rec[k])
+        if not present or missing / total > max_missing:
+            continue
+        for combo in itertools.product(*[rec[k] for k in present]):
+            members = [
+                m for m in PARITY_MPI
+                if all(v in dict(zip(PARITY_KEYS, m[2:]))[k] for k, v in zip(present, combo))
+            ]
+            if cap is None or len(members) <= cap:
+                out |= {(rid, m[1]) for m in members}
+    return out
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {},
+        {"broadcast_probe_rows": 0},
+        {"broadcast_probe_rows": 0, "salt_threshold": 2, "num_salts": 3,
+         "census_fraction": 1.0},
+        {"max_block_size": 3},
+        {"broadcast_probe_rows": 0, "max_block_size": 3},
+    ],
+    ids=["broadcast", "shuffle", "salted", "capped", "salted-capped"],
+)
+def test_blocked_persons_matches_brute_force(spark, kwargs):
+    """Every physical path of blocked_persons gives the brute-force J1+J2
+    candidates over multi-valued keys."""
+    from recordlinker_spark.operators.blocking import blocked_persons
+
+    alg = Algorithm(
+        label="t",
+        passes=(
+            AlgorithmPass(
+                label="p",
+                blocking_keys=PARITY_KEYS,
+                evaluators=(),
+                possible_match_window=(0.0, 1.0),
+            ),
+        ),
+        context=AlgorithmContext(
+            log_odds=PARITY_ODDS, max_missing_allowed_proportion=0.5
+        ),
+    )
+    bk = ", ".join(f"bk_{k} array<string>" for k in PARITY_KEYS)
+    mpi = spark.createDataFrame(PARITY_MPI, f"record_id string, person_id string, {bk}")
+    inc = spark.createDataFrame(PARITY_INCOMING, f"record_id string, {bk}")
+    got = {
+        (r["record_id_l"], r["person_id"])
+        for r in blocked_persons(inc, mpi, alg, alg.passes[0], **kwargs).collect()
+    }
+    expected = _reference_blocked(0.5, kwargs.get("max_block_size"))
+    assert got == expected
+    # the fixture reaches what it is for: a multi-subset build row, the
+    # gate's drop, and (capped) a dropped block beside a kept one
+    assert {r for r, _ in expected} == {"q0", "q1", "q2", "q4", "q5"} - (
+        {"q4"} if "max_block_size" in kwargs else set()
+    )

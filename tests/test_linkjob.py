@@ -1,5 +1,6 @@
 """link_batch's caches and column memo: every caller releases what it
-cached, and the per-context feature/key columns match a fresh build."""
+cached, the streaming sink appends what its decisions committed, and
+the per-context feature, key and scrub columns match a fresh build."""
 
 import os
 import subprocess
@@ -8,9 +9,9 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from recordlinker_spark.config import dibbs_default
+from recordlinker_spark.config import SkipValue, dibbs_default
 from recordlinker_spark.functions import features
-from recordlinker_spark.operators import linkjob
+from recordlinker_spark.operators import linkjob, skipvalues
 from recordlinker_spark.plans import jobs
 from recordlinker_spark.plans.replay import mpi_projection
 from recordlinker_spark.schemas import DOCUMENTS_SCHEMA
@@ -78,7 +79,25 @@ def test_job_link_releases_every_cache(spark, tmp_path, no_cache):
     assert _nothing_cached(spark)
 
 
+def _mpi_matches_decisions(spark, linker, mpi_dir, batch_id):
+    """Every MPI row of the batch carries its decisions partition's
+    person_id, once."""
+    decided = {
+        r["record_id"]: r["person_id"]
+        for r in spark.read.parquet(linker._batch_dir(batch_id)).collect()
+    }
+    appended = [
+        (r["record_id"], r["person_id"])
+        for r in spark.read.parquet(mpi_dir).collect()
+        if r["record_id"] in decided
+    ]
+    assert sorted(appended, key=str) == sorted(decided.items(), key=str)
+
+
 def test_incremental_linker_releases_every_cache(spark, tmp_path, monkeypatch, no_cache):
+    """The sink releases its caches, the parsed batch included, also when
+    the MPI append raises; the append carries the committed decisions,
+    and a replay of a batch whose append failed appends them once."""
     mpi_dir = str(tmp_path / "mpi")
     mpi_projection(
         parse_documents(_docs(spark, SIX_PATIENTS[:2], "m")).withColumn(
@@ -90,30 +109,57 @@ def test_incremental_linker_releases_every_cache(spark, tmp_path, monkeypatch, n
     )
     linker(_docs(spark, SIX_PATIENTS[2:4]), 0)
     assert spark.read.parquet(mpi_dir).count() == 4
+    _mpi_matches_decisions(spark, linker, mpi_dir, 0)
     assert _nothing_cached(spark)
 
     def failing_append(_df):
         raise RuntimeError("MPI append failed")
 
-    monkeypatch.setattr(incremental, "mpi_projection", failing_append)
-    with pytest.raises(RuntimeError, match="MPI append failed"):
-        linker(_docs(spark, SIX_PATIENTS[4:], "x"), 1)
+    batch = _docs(spark, SIX_PATIENTS[4:], "x")
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "mpi_projection", failing_append)
+        with pytest.raises(RuntimeError, match="MPI append failed"):
+            linker(batch, 1)
+    assert _nothing_cached(spark)
+    # the decisions were committed, the append was not: the replay
+    # links the batch again and appends it once
+    assert spark.read.parquet(linker._batch_dir(1)).count() == 2
+    assert spark.read.parquet(mpi_dir).count() == 4
+    linker(batch, 1)
+    assert spark.read.parquet(mpi_dir).count() == 6
+    _mpi_matches_decisions(spark, linker, mpi_dir, 1)
     assert _nothing_cached(spark)
 
 
 def test_memoized_columns_match_fresh_build(spark):
-    """The per-context feature and key columns are built once and give
-    the rows a fresh build gives, over the raw and the scrubbed record."""
+    """The per-context feature, key and skip-scrub columns are built once
+    and give the rows a fresh build gives, over the raw and the scrubbed
+    record."""
     alg = dibbs_default()
     recs = parse_documents(_docs(spark, SIX_PATIENTS)).select(*linkjob.PII_COLS)
     assert features.feature_exprs(["SS"]) is features.feature_exprs(["SS"])
     assert features.blocking_key_exprs() is features.blocking_key_exprs()
+
+    # rules that hit the fixture in every scrubbed column
+    skips = alg.context.skip_values + (
+        SkipValue("GIVEN_NAME", ("tiberius",)),
+        SkipValue("LAST_NAME", ("shepard",)),
+        SkipValue("CITY", ("boston",)),
+        SkipValue("PHONE", ("123-456-7890",)),
+        SkipValue("SEX", ("female",)),
+        SkipValue("IDENTIFIER:MR", ("1234567890::mr",)),
+    )
+    memo_scrub = linkjob.remove_skip_values(recs, skips)
+    assert features._per_context(("skip", skips), lambda: None), "scrub not memoized"
 
     fresh_feats = [c.alias(n) for n, c in features._feature_trees(("SS",), True).items()]
     memo = features.blocking_key_columns(features.feature_columns(recs, ["SS"]))
     features._TREES.clear()
     fresh = features.blocking_key_columns(recs.select("*", *fresh_feats))
     assert _sorted_rows(memo) == _sorted_rows(fresh)
+    fresh_scrub = recs.withColumns(skipvalues._scrub_columns(skips))
+    assert _sorted_rows(memo_scrub) == _sorted_rows(fresh_scrub)
+    assert _sorted_rows(memo_scrub) != _sorted_rows(recs)
 
     # the fused sides carry the same features and keys as separate
     # builds over the raw and the skip-scrubbed record

@@ -1,6 +1,8 @@
 """Regression tests for round-4 fixes: minhash permutation wrapping,
 broadcast-gate explosion bail, parquet dynamic-overwrite contract."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -162,7 +164,6 @@ def test_subsets_precomputed_matches_discovered(spark):
     from recordlinker_spark.config import dibbs_default
     from recordlinker_spark.operators.blocking import (
         blocked_persons,
-        composite_values,
         missingness_filter,
     )
     from recordlinker_spark.operators.linkjob import (
@@ -211,11 +212,15 @@ def test_subsets_precomputed_matches_discovered(spark):
         # incoming row count
         i = alg.passes.index(p)
         assert fused_subsets[i] == subs
-        tagged = missingness_filter(inc_bk, alg, p)
-        assert fused_rows[i] == sum(
-            composite_values(tagged.filter(F.col("_subset") == ",".join(s)), s).count()
-            for s in subs
-        )
+        # a record's composite probe rows: the product of its key-array
+        # sizes over its present-key subset
+        expected = 0
+        for r in missingness_filter(inc_bk, alg, p).collect():
+            if r["_subset"]:
+                expected += math.prod(
+                    len(r[f"bk_{k}"]) for k in r["_subset"].split(",")
+                )
+        assert fused_rows[i] == expected
 
 
 def test_race_scrub_keeps_null_elements(spark):
