@@ -21,6 +21,12 @@ Faithful asymmetries preserved from the reference:
   person_id (pending review) and are invisible to future blocking
   (link.py:325-341 leaves matched_person None).
 
+The per-pass chain is :func:`link_passes`, run by three callers:
+:func:`link_batch` (then grades -> fold -> decisions); the corpus
+bootstrap's self-link (``plans.jobs.job_cluster``); and ``--run-dir``
+(``plans.checkpoint``), which is :func:`link_batch` with a ``stage``
+hook that checkpoints each stage.
+
 Batch semantics: every record in the incoming batch is linked against
 the *pre-existing* MPI (order-independent within the batch), matching
 the reference's micro-batch deployment. For reference-exact sequential
@@ -31,6 +37,7 @@ from __future__ import annotations
 
 import concurrent.futures
 import dataclasses
+import typing
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,8 +49,7 @@ from recordlinker_spark.operators.blocking import (
     missingness_keep,
     present_subset,
 )
-from recordlinker_spark.operators.decide import cluster_scores  # noqa: F401 (re-export)
-from recordlinker_spark.operators.decide import decide, fold_passes
+from recordlinker_spark.operators.decide import cluster_scores, decide, fold_passes
 from recordlinker_spark.operators.scoring import (
     attach_pair_features,
     feature_col,
@@ -63,6 +69,9 @@ PII_COLS = [
     "identifiers",
 ]
 
+# stage(name, build) -> the frame of stage ``name``
+Stage = typing.Callable[[str, typing.Callable[[], DataFrame]], DataFrame]
+
 
 @dataclasses.dataclass
 class LinkOutput:
@@ -73,18 +82,12 @@ class LinkOutput:
     cached: list = dataclasses.field(default_factory=list, repr=False)
 
     def unpersist(self) -> None:
-        """Release the projections link_batch cached for this call.
-        Callers that invoke link_batch in a loop (replay harness) MUST
-        call this after consuming the outputs, or cached frames
-        accumulate in the block manager across iterations.
-
-        Dependents go first: uncaching a frame makes Spark re-plan
-        every still-cached plan built on it (seconds per cached
-        decisions plan), while a frame with no cached dependents is
-        dropped at once."""
-        for df in reversed(self.cached):
-            df.unpersist()
-        self.cached.clear()
+        """Release the projections link_batch cached for this call,
+        dependents first (:func:`release`).  Callers that invoke
+        link_batch in a loop (replay harness) MUST call this after
+        consuming the outputs, or cached frames accumulate in the block
+        manager across iterations."""
+        release(self.cached)
 
     # context-manager form: ``with link_batch(...) as out`` releases
     # the cached projections even when consuming an output raises —
@@ -218,114 +221,157 @@ def _subsets_and_rows(inc: DataFrame, algorithm: Algorithm):
     return subsets, probe_rows, total
 
 
+def release(cached: list) -> None:
+    """Unpersist frames listed inputs-first, dependents first: uncaching
+    a frame makes Spark re-plan every still-cached plan built on it
+    (seconds per cached decisions plan); a frame with no cached
+    dependents is dropped at once."""
+    for df in reversed(cached):
+        df.unpersist()
+    cached.clear()
+
+
+def _build(_name: str, build: typing.Callable[[], DataFrame]) -> DataFrame:
+    return build()
+
+
+def link_passes(
+    incoming: DataFrame,
+    mpi_patients: DataFrame,
+    algorithm: Algorithm,
+    cache_intermediate: bool = False,
+    stage: Stage = _build,
+    **block_kwargs,
+) -> tuple[list[DataFrame], DataFrame, list]:
+    """Both sides, then per pass, in concurrent threads: candidate pairs
+    -> attached features -> scores, through ``stage`` (see
+    :func:`link_batch`).  Returns (scored pairs per pass, the incoming
+    side, the frames cached for this call, for :func:`release`)."""
+    inc = incoming_side(incoming, algorithm)
+    mpi = mpi_side(mpi_patients, algorithm)
+    cached: list = []
+    probe_rows_by_pass: dict[int, int] = {}
+    subsets_by_pass: dict[int, list] = {}
+    try:
+        if len(algorithm.passes) > 1 or cache_intermediate:
+            # every pass re-joins these projections; without a cache each
+            # pass would re-run span parsing + feature extraction over the
+            # whole MPI (the widest scan in the job)
+            inc = inc.cache()
+            mpi = mpi.cache()
+            cached += [inc, mpi]
+            # materialize the cached projections BEFORE the pass threads
+            # fork: concurrent first-touch of an unmaterialized cache makes
+            # every branch compute all partitions (in-flight cache work
+            # doesn't dedupe), duplicating the widest scans of the job
+            # exactly when parallelism is highest.  Two independent jobs,
+            # submitted from threads so the warm-up uses the whole
+            # cluster: the MPI count, and ONE job over the incoming keys
+            # that finds every pass's present-key subsets, their exploded
+            # probe rows and the incoming count — per pass, these would
+            # each be a driver round-trip of fixed, non-scaling latency.
+            # The known counts spare blocked_persons its counting jobs.
+            with concurrent.futures.ThreadPoolExecutor(max_workers=2) as warm:
+                mpi_count = warm.submit(mpi.count)
+                subsets_by_pass, probe_rows_by_pass, probe_count = warm.submit(
+                    _subsets_and_rows, inc, algorithm
+                ).result()
+                block_kwargs.setdefault("mpi_count", mpi_count.result())
+            block_kwargs.setdefault("probe_count", probe_count)
+
+        def build_pass(i: int) -> DataFrame:
+            algorithm_pass = algorithm.passes[i]
+            kw = dict(block_kwargs)
+            if i in subsets_by_pass:
+                kw["subsets"] = subsets_by_pass[i]
+                kw["exploded_probe_rows"] = probe_rows_by_pass[i]
+            pairs = stage(
+                f"pass{i}_pairs",
+                lambda: candidate_pairs(inc, mpi, algorithm, algorithm_pass, **kw),
+            )
+            scored = stage(f"pass{i}_scores", lambda: score_pairs(
+                attach_pair_features(pairs, inc, mpi, algorithm_pass), algorithm, algorithm_pass
+            ))
+            if cache_intermediate:
+                # one blocking+scoring computation shared by the cluster
+                # aggregation and any pair_scores consumer
+                scored = scored.cache()
+                cached.append(scored)
+            return scored
+
+        # passes are independent until the fold; their driver-side actions
+        # (subset collect, skew census) are small serial jobs, so submit
+        # them from concurrent threads — Spark schedules the jobs in
+        # parallel and one pass's scoring overlaps the other's blocking.
+        # (A merged all-pass blocking plan with a cache barrier was
+        # measured SLOWER at 4N executors: the barrier serializes blocking
+        # against scoring and costs more than the saved stages.)
+        with concurrent.futures.ThreadPoolExecutor(max_workers=4) as pool:
+            scored_per_pass = list(pool.map(build_pass, range(len(algorithm.passes))))
+    except BaseException:
+        release(cached)
+        raise
+    return scored_per_pass, inc, cached
+
+
 def link_batch(
     incoming: DataFrame,
     mpi_patients: DataFrame,
     algorithm: Algorithm,
     keep_pair_scores: bool = False,
     cache_intermediate: bool = False,
+    stage: Stage = _build,
     **block_kwargs,
 ) -> LinkOutput:
-    """Link a batch of incoming PII records against the MPI.
+    """Link a batch of incoming PII records against the MPI:
+    :func:`link_passes`, then per-pass grades -> fold -> decisions.
 
     :param incoming: output of sources.ingest.parse_documents (pii
         columns + untouched ``spans``).
     :param mpi_patients: pii columns + ``person_id`` (NULL = pending
         review, excluded from blocking).
+    :param stage: ``stage(name, build)`` returns the frame of stage
+        ``pass{i}_pairs``, ``pass{i}_scores``, ``pass{i}_grades`` or
+        ``decisions``, from the pass threads for the first two.  The
+        default runs ``build``; ``--run-dir`` checkpoints each stage.
     """
-    inc = incoming_side(incoming, algorithm)
-    mpi = mpi_side(mpi_patients, algorithm)
-    cached: list = []
-    probe_rows_by_pass: dict[int, int] = {}
-    if len(algorithm.passes) > 1 or cache_intermediate:
-        # every pass re-joins these projections; without a cache each
-        # pass would re-run span parsing + feature extraction over the
-        # whole MPI (the widest scan in the job)
-        inc = inc.cache()
-        mpi = mpi.cache()
-        cached += [inc, mpi]
-        # materialize the cached projections BEFORE the pass threads
-        # fork: concurrent first-touch of an unmaterialized cache makes
-        # every branch compute all partitions (in-flight cache work
-        # doesn't dedupe), duplicating the widest scans of the job
-        # exactly when parallelism is highest.  Two independent jobs,
-        # submitted from threads so the warm-up uses the whole
-        # cluster: the MPI count, and ONE job over the incoming keys
-        # that finds every pass's present-key subsets, their exploded
-        # probe rows and the incoming count — per pass, these would
-        # each be a driver round-trip of fixed, non-scaling latency.
-        # The known counts spare blocked_persons its counting jobs.
-        with concurrent.futures.ThreadPoolExecutor(max_workers=2) as warm:
-            mpi_count = warm.submit(mpi.count)
-            if "subsets_by_pass" in block_kwargs:
-                probe_count = warm.submit(inc.count).result()
-            else:
-                subsets, probe_rows_by_pass, probe_count = warm.submit(
-                    _subsets_and_rows, inc, algorithm
-                ).result()
-                block_kwargs["subsets_by_pass"] = subsets
-            block_kwargs.setdefault("mpi_count", mpi_count.result())
-        block_kwargs.setdefault("probe_count", probe_count)
-
-    subsets_by_pass = block_kwargs.pop("subsets_by_pass", None)
-    pass_index = {id(p): i for i, p in enumerate(algorithm.passes)}
-
-    def build_pass(algorithm_pass):
-        kw = dict(block_kwargs)
-        i = pass_index[id(algorithm_pass)]
-        if subsets_by_pass is not None:
-            kw["subsets"] = subsets_by_pass[i]
-        if i in probe_rows_by_pass:
-            kw["exploded_probe_rows"] = probe_rows_by_pass[i]
-        pairs = candidate_pairs(inc, mpi, algorithm, algorithm_pass, **kw)
-        with_feats = attach_pair_features(pairs, inc, mpi, algorithm_pass)
-        scored = score_pairs(with_feats, algorithm, algorithm_pass)
-        if cache_intermediate:
-            # one blocking+scoring computation shared by the cluster
-            # aggregation and any pair_scores consumer
-            scored = scored.cache()
-            cached.append(scored)
-        return scored
-
-    # passes are independent until the fold; their driver-side actions
-    # (subset collect, skew census) are small serial jobs, so submit
-    # them from concurrent threads — Spark schedules the jobs in
-    # parallel and one pass's scoring overlaps the other's blocking.
-    # (A merged all-pass blocking plan with a cache barrier was
-    # measured SLOWER at 4N executors: the barrier serializes blocking
-    # against scoring and costs more than the saved stages.)
-    with concurrent.futures.ThreadPoolExecutor(max_workers=4) as pool:
-        scored_per_pass = list(pool.map(build_pass, algorithm.passes))
-
-    per_pass: list[DataFrame] = []
-    all_scored: DataFrame | None = None
-    for algorithm_pass, scored in zip(algorithm.passes, scored_per_pass):
-        if keep_pair_scores:
-            sel = scored.select(
-                "record_id_l",
-                "person_id",
-                "record_id_r",
-                F.lit(algorithm_pass.resolved_label).alias("pass_label"),
-                "score",
-            )
-            all_scored = sel if all_scored is None else all_scored.unionByName(sel)
-        per_pass.append(cluster_scores(scored, algorithm, algorithm_pass))
-
-    folded = fold_passes(per_pass)
-    # the record ids come from the cached side: ``incoming`` would be
-    # parsed again for them
-    decisions, results = decide(
-        folded, inc, algorithm.context.include_multiple_matches
+    scored_per_pass, inc, cached = link_passes(
+        incoming, mpi_patients, algorithm, cache_intermediate, stage, **block_kwargs
     )
-    # decisions is ONE narrow row per incoming record, yet every other
-    # output hangs off it — without this cache a caller consuming
-    # decisions and then new_patients (replay does, per record)
-    # re-executes the entire
-    # blocking+scoring+fold+decide pipeline for the second action.
-    # Caching the tiny end frame costs one materialization of rows the
-    # first action computes anyway.
-    decisions = decisions.cache()
-    cached.append(decisions)
+    try:
+        per_pass: list[DataFrame] = []
+        all_scored: DataFrame | None = None
+        for i, (algorithm_pass, scored) in enumerate(zip(algorithm.passes, scored_per_pass)):
+            if keep_pair_scores:
+                sel = scored.select(
+                    "record_id_l",
+                    "person_id",
+                    "record_id_r",
+                    F.lit(algorithm_pass.resolved_label).alias("pass_label"),
+                    "score",
+                )
+                all_scored = sel if all_scored is None else all_scored.unionByName(sel)
+            per_pass.append(stage(
+                f"pass{i}_grades", lambda: cluster_scores(scored, algorithm, algorithm_pass)
+            ))
+
+        # the record ids come from the cached side: ``incoming`` would be
+        # parsed again for them
+        decisions, results = decide(
+            fold_passes(per_pass), inc, algorithm.context.include_multiple_matches
+        )
+        # decisions is ONE narrow row per incoming record, yet every other
+        # output hangs off it — without this cache a caller consuming
+        # decisions and then new_patients (replay does, per record)
+        # re-executes the entire
+        # blocking+scoring+fold+decide pipeline for the second action.
+        # Caching the tiny end frame costs one materialization of rows the
+        # first action computes anyway.
+        decisions = stage("decisions", lambda d=decisions: d).cache()
+        cached.append(decisions)
+    except BaseException:
+        release(cached)
+        raise
 
     new_patients = incoming.join(
         decisions.select("record_id", "person_id"), "record_id"

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import typing
 
@@ -38,6 +39,11 @@ from pyspark.sql import functions as F
 
 
 class StageRunner:
+    """The stages of one run directory.  Stages may run from concurrent
+    threads (link_batch's pass threads): one lock guards the manifest
+    and the in-memory records.  A stage's ``lineage`` is the stages
+    complete when it finished, which may include a sibling pass's."""
+
     def __init__(self, spark: SparkSession, run_dir: str, job_id: str = "job"):
         self.spark = spark
         self.run_dir = run_dir
@@ -46,6 +52,7 @@ class StageRunner:
         self.manifest_path = os.path.join(run_dir, "MANIFEST.jsonl")
         self._done: dict[str, dict] = {}
         self._records: list[dict] = []
+        self._lock = threading.Lock()
         if os.path.exists(self.manifest_path):
             with open(self.manifest_path) as fh:
                 for line in fh:
@@ -60,6 +67,12 @@ class StageRunner:
             fh.write(json.dumps(rec) + "\n")
             fh.flush()
             os.fsync(fh.fileno())
+
+    def _complete(self, name: str, rec: dict) -> None:
+        with self._lock:
+            rec["lineage"] = sorted(self._done)
+            self._append_manifest(rec)
+            self._done[name] = rec
 
     def completed(self, name: str) -> bool:
         return name in self._done
@@ -114,8 +127,9 @@ class StageRunner:
             "fp": fingerprint,
             "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         }
-        self._append_manifest(rec)
-        self._records.append(rec)
+        with self._lock:
+            self._append_manifest(rec)
+            self._records.append(rec)
 
     def stage(
         self,
@@ -147,11 +161,9 @@ class StageRunner:
             "rows": n,
             "partitions": parts,
             "seconds": round(time.perf_counter() - t0, 3),
-            "lineage": sorted(self._done),
             "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         }
-        self._append_manifest(rec)
-        self._done[name] = rec
+        self._complete(name, rec)
         self.metric(name, "rows", float(n))
         self.metric(name, "seconds", rec["seconds"])
         return out
@@ -174,11 +186,9 @@ class StageRunner:
             "status": "complete",
             "kind": "side_effect",
             "seconds": round(time.perf_counter() - t0, 3),
-            "lineage": sorted(self._done),
             "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         }
-        self._append_manifest(rec)
-        self._done[name] = rec
+        self._complete(name, rec)
         self.metric(name, "seconds", rec["seconds"])
         return True
 
@@ -198,7 +208,7 @@ class StageRunner:
             "value": float(value),
             "ts": time.time(),
         }
-        with open(path, "a") as fh:
+        with self._lock, open(path, "a") as fh:
             fh.write(json.dumps(rec) + "\n")
             fh.flush()
             os.fsync(fh.fileno())
@@ -238,12 +248,11 @@ def checkpointed_link_job(
         ingest -> per-pass pairs -> per-pass scores -> per-pass grades
                -> folded decisions
 
-    A driver restart with the same ``run_dir`` resumes after the last
-    complete stage (verified in tests/test_checkpoint.py)."""
-    from recordlinker_spark.operators.blocking import candidate_pairs
-    from recordlinker_spark.operators.decide import cluster_scores, decide, fold_passes
-    from recordlinker_spark.operators.linkjob import prepare_incoming, prepare_mpi
-    from recordlinker_spark.operators.scoring import attach_pair_features, score_pairs
+    The stages after ``ingest`` are link_batch's own chain, each one
+    checkpointed through its ``stage`` hook.  A driver restart with the
+    same ``run_dir`` resumes after the last complete stage (verified in
+    tests/test_checkpoint.py)."""
+    from recordlinker_spark.operators.linkjob import link_batch
     from recordlinker_spark.sources.ingest import parse_documents
 
     runner = StageRunner(spark, run_dir)
@@ -263,72 +272,28 @@ def checkpointed_link_job(
         return [row["n"], row["h"]]
 
     # once 'decisions' is checkpointed, nothing that still runs reads
-    # the MPI (the CLI's mpi_append side effect joins checkpointed
-    # stages only) — and the job's own append has CHANGED the MPI, so
-    # holding the fingerprint would refuse idempotent re-runs of a
-    # completed job and crash-window resumes of the append itself
-    ignore = ("mpi",) if runner.completed("decisions") else ()
+    # the MPI (it is read back below without building the chain, and
+    # the CLI's mpi_append side effect joins checkpointed stages only)
+    # — and the job's own append has CHANGED the MPI, so holding the
+    # fingerprint would refuse idempotent re-runs of a completed job
+    # and crash-window resumes of the append itself
+    done = runner.completed("decisions")
     runner.validate_inputs(
         {
             "documents": dffp(documents, "doc_id, spans"),
             "mpi": dffp(mpi_patients, "record_id, person_id"),
             "algorithm": hashlib.md5(repr(algorithm).encode()).hexdigest(),
         },
-        ignore=ignore,
+        ignore=("mpi",) if done else (),
     )
 
-    records = runner.stage("ingest", lambda: parse_documents(documents))
-    inc_feats, inc_bk = prepare_incoming(records.drop("_part_id"), algorithm)
-    mpi_feats, mpi_bk = prepare_mpi(mpi_patients, algorithm)
+    def stage(name: str, build: typing.Callable[[], DataFrame]) -> DataFrame:
+        return runner.stage(name, build).drop("_part_id")
 
-    per_pass = []
-    for idx, algorithm_pass in enumerate(algorithm.passes):
-        label = f"pass{idx}"
-        pairs = runner.stage(
-            f"{label}_pairs",
-            lambda p=algorithm_pass: candidate_pairs(
-                inc_bk, mpi_bk, algorithm, p, **block_kwargs
-            ),
-        )
-        scored = runner.stage(
-            f"{label}_scores",
-            lambda p=algorithm_pass, pr=pairs: score_pairs(
-                attach_pair_features(
-                    pr.drop("_part_id"), inc_feats, mpi_feats, p
-                ),
-                algorithm,
-                p,
-            ),
-        )
-        graded = runner.stage(
-            f"{label}_grades",
-            lambda p=algorithm_pass, sc=scored: cluster_scores(
-                sc.drop("_part_id"), algorithm, p
-            ).drop("median_features"),
-        )
-        mf_keys = [e.feature for e in algorithm_pass.evaluators]
-        graded = graded.withColumn(
-            "median_features",
-            F.create_map(
-                *[
-                    x
-                    for feat in mf_keys
-                    for x in (
-                        F.lit(feat),
-                        F.col("median_" + feat.replace(":", "_")),
-                    )
-                ]
-            ),
-        )
-        per_pass.append(graded)
-
-    def final():
-        folded = fold_passes([df.drop("_part_id") for df in per_pass])
-        decisions, _results = decide(
-            folded,
-            records.drop("_part_id").select(F.col("record_id")),
-            algorithm.context.include_multiple_matches,
-        )
-        return decisions
-
-    return runner.stage("decisions", final)
+    if done:
+        return spark.read.parquet(os.path.join(run_dir, "decisions")).drop("_part_id")
+    records = stage("ingest", lambda: parse_documents(documents))
+    out = link_batch(records, mpi_patients, algorithm, stage=stage, **block_kwargs)
+    # every stage is written by now: the caches only served the build
+    out.unpersist()
+    return out.decisions

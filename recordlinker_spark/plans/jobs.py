@@ -166,22 +166,16 @@ def job_seed(spark: SparkSession, args) -> None:
 
 def job_link(spark: SparkSession, args, persist: bool = True) -> None:
     from recordlinker_spark.operators.linkjob import link_batch
+    from recordlinker_spark.plans.checkpoint import StageRunner, checkpointed_link_job
 
     target = _mpi_target(args)
     fhir_mode = bool(getattr(args, "fhir", False))
     run_dir = getattr(args, "run_dir", None)
-    if run_dir:
-        # north-rule resumability from the CLI surface: route through
-        # the stage-checkpointed pipeline so a driver restart with the
-        # same --run-dir resumes after the last complete stage instead
-        # of recomputing the whole job
-        if fhir_mode:
-            raise ValueError(
-                "--run-dir and --fhir are mutually exclusive: bundle "
-                "enrichment is not stage-checkpointed"
-            )
-        _job_link_checkpointed(spark, args, target, run_dir, persist)
-        return
+    if run_dir and fhir_mode:
+        raise ValueError(
+            "--run-dir and --fhir are mutually exclusive: bundle "
+            "enrichment is not stage-checkpointed"
+        )
     if fhir_mode:
         # batch analog of POST /link/fhir (link_router.py:90-122):
         # --documents is a directory of FHIR bundle JSON files, one
@@ -228,15 +222,25 @@ def job_link(spark: SparkSession, args, persist: bool = True) -> None:
         docs_df = spark.read.parquet(args.documents)
         records = parse_documents(docs_df)
     mpi = _read_mpi_t(spark, target)
-    out = link_batch(records, mpi, _algorithm(args))
-    try:
-        out.decisions.write.mode("overwrite").parquet(args.out)
-    finally:
-        # release even when a write raises: a long-lived driver that
-        # catches and retries would otherwise accumulate cached
-        # MPI-sized projections per attempt (same rationale as the
-        # streaming sink's finally in streaming/incremental.py)
-        out.unpersist()
+    if run_dir:
+        # north-rule resumability from the CLI surface: every stage is
+        # checkpointed to the run directory with per-partition lineage
+        # + metrics (plans/checkpoint.py), so a driver restart with the
+        # same --run-dir resumes after the last complete stage; the
+        # append below joins the checkpointed records
+        decisions = checkpointed_link_job(spark, docs_df, mpi, _algorithm(args), run_dir)
+        decisions.write.mode("overwrite").parquet(args.out)
+        records = spark.read.parquet(os.path.join(run_dir, "ingest")).drop("_part_id")
+    else:
+        out = link_batch(records, mpi, _algorithm(args))
+        try:
+            out.decisions.write.mode("overwrite").parquet(args.out)
+        finally:
+            # release even when a write raises: a long-lived driver that
+            # catches and retries would otherwise accumulate cached
+            # MPI-sized projections per attempt (same rationale as the
+            # streaming sink's finally in streaming/incremental.py)
+            out.unpersist()
     # every further output reads the decisions back from what was just
     # written: one pipeline execution feeds them all, each plans over a
     # file scan instead of the link's lineage, and the MPI receives
@@ -253,71 +257,40 @@ def job_link(spark: SparkSession, args, persist: bool = True) -> None:
             decisions.select("record_id", "person_id"), "record_id"
         )
         if not fhir_mode:
-            # attach here, at the append, like the --run-dir and
-            # streaming paths: only the MPI insert needs the column
+            # attach here, at the append, like the streaming path: only
+            # the MPI insert needs the column
             new_patients = attach_external_person_id(new_patients, docs_df)
-        target.append(mpi_projection(new_patients))
-
-
-def _job_link_checkpointed(
-    spark: SparkSession, args, target: TableTarget, run_dir: str,
-    persist: bool,
-) -> None:
-    """link/match with --run-dir: every pipeline stage checkpointed to
-    the run directory with per-partition lineage + metrics
-    (plans/checkpoint.py); the MPI append is an at-least-once,
-    effectively-idempotent side-effect stage — a crash between the
-    append and the manifest fsync replays it on resume
-    (StageRunner.side_effect), and the store dedups record_ids on
-    read, so the replay is harmless."""
-    from recordlinker_spark.plans.checkpoint import (
-        StageRunner,
-        checkpointed_link_job,
-    )
-
-    docs = spark.read.parquet(args.documents)
-    mpi = _read_mpi_t(spark, target)
-    decisions = checkpointed_link_job(
-        spark, docs, mpi, _algorithm(args), run_dir
-    )
-    decisions.drop("_part_id").write.mode("overwrite").parquet(args.out)
-    if persist:
-        runner = StageRunner(spark, run_dir)
-
-        def append_new_patients():
-            import os
-
-            records = attach_external_person_id(
-                spark.read.parquet(
-                    os.path.join(run_dir, "ingest")
-                ).drop("_part_id"),
-                docs,
+        if run_dir:
+            # an at-least-once, effectively-idempotent side-effect stage:
+            # a crash between the append and the manifest fsync replays
+            # it on resume (StageRunner.side_effect), and the store
+            # dedups record_ids on read, so the replay is harmless
+            StageRunner(spark, run_dir).side_effect(
+                "mpi_append", lambda: target.append(mpi_projection(new_patients))
             )
-            new_patients = records.join(
-                decisions.select("record_id", "person_id"), "record_id"
-            )
+        else:
             target.append(mpi_projection(new_patients))
-
-        runner.side_effect("mpi_append", append_new_patients)
 
 
 def job_cluster(spark: SparkSession, args) -> None:
     """Corpus bootstrap: dedupe a whole documents table into persons."""
-    from recordlinker_spark.operators.blocking import candidate_pairs
     from recordlinker_spark.operators.cluster import assign_persons
-    from recordlinker_spark.operators.linkjob import prepare_incoming, prepare_mpi
-    from recordlinker_spark.operators.scoring import attach_pair_features, score_pairs
+    from recordlinker_spark.operators.linkjob import link_passes, release
 
     algorithm = _algorithm(args)
     records = parse_documents(spark.read.parquet(args.documents)).cache()
+    # released in reverse, so the chain's caches go before the records
+    cached = [records]
     try:
         # self-linkage: every record probes against every record
-        inc_feats, inc_bk = prepare_incoming(records, algorithm)
         selfmpi = records.withColumn("person_id", F.col("record_id"))
-        mpi_feats, mpi_bk = prepare_mpi(selfmpi, algorithm)
+        scored_per_pass, _, chain_cached = link_passes(records, selfmpi, algorithm)
+        cached += chain_cached
 
         edges = None
-        for algorithm_pass in algorithm.passes:
+        for algorithm_pass, scored in zip(algorithm.passes, scored_per_pass):
+            _, cmt = algorithm_pass.possible_match_window
+            max_points = algorithm.max_points(algorithm_pass)
             # != (not <): candidate generation is PROBE-sided — the J2
             # missingness gate and the build side's key-presence filter
             # apply asymmetrically, so a pair may be reachable in only
@@ -326,19 +299,11 @@ def job_cluster(spark: SparkSession, args) -> None:
             # edges whenever the reachable direction has the larger id;
             # connected_components symmetrizes + dedups anyway, so the
             # only thing < bought was halving scored rows — at the cost
-            # of id-order-dependent clusters.
-            pairs = candidate_pairs(
-                inc_bk, mpi_bk, algorithm, algorithm_pass
-            ).filter(F.col("record_id_l") != F.col("record_id_r"))
-            scored = score_pairs(
-                attach_pair_features(pairs, inc_feats, mpi_feats, algorithm_pass),
-                algorithm,
-                algorithm_pass,
-            )
-            _, cmt = algorithm_pass.possible_match_window
-            max_points = algorithm.max_points(algorithm_pass)
+            # of id-order-dependent clusters.  The optimizer pushes the
+            # filter below the scoring UDF, so self-pairs are not scored.
             certain = scored.filter(
-                F.col("score") / F.lit(max_points) >= F.lit(cmt)
+                (F.col("record_id_l") != F.col("record_id_r"))
+                & (F.col("score") / F.lit(max_points) >= F.lit(cmt))
             ).select("record_id_l", "record_id_r")
             edges = certain if edges is None else edges.unionByName(certain)
 
@@ -352,7 +317,7 @@ def job_cluster(spark: SparkSession, args) -> None:
         labels = assign_persons(records, edges, seed_labels=seed_labels)
         labels.write.mode("overwrite").parquet(args.out)
     finally:
-        records.unpersist()
+        release(cached)
 
 
 def _write_tune_manifest(path: str, manifest: dict) -> None:

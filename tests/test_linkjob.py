@@ -1,6 +1,7 @@
 """link_batch's caches and column memo: every caller releases what it
-cached, the streaming sink appends what its decisions committed, and
-the per-context feature, key and scrub columns match a fresh build."""
+cached (the corpus bootstrap's self-link too), the streaming sink
+appends what its decisions committed, and the per-context feature, key
+and scrub columns match a fresh build."""
 
 import os
 import subprocess
@@ -62,6 +63,23 @@ def test_link_batch_context_releases_every_cache(spark, no_cache):
     assert _nothing_cached(spark)
 
 
+@pytest.mark.parametrize("failing", ["pass0_scores", "pass1_grades"])
+def test_link_batch_releases_every_cache_when_a_stage_raises(spark, no_cache, failing):
+    """A stage that raises, in the pass threads or after them, leaves
+    nothing cached."""
+    recs = parse_documents(_docs(spark, SIX_PATIENTS))
+    mpi = recs.withColumn("person_id", F.col("record_id"))
+
+    def stage(name, build):
+        if name == failing:
+            raise RuntimeError(name)
+        return build()
+
+    with pytest.raises(RuntimeError, match=failing):
+        linkjob.link_batch(recs, mpi, dibbs_default(), stage=stage)
+    assert _nothing_cached(spark)
+
+
 def test_job_link_releases_every_cache(spark, tmp_path, no_cache):
     docs_dir, mpi_dir = str(tmp_path / "docs"), str(tmp_path / "mpi")
     _docs(spark, SIX_PATIENTS[:3]).write.parquet(docs_dir)
@@ -76,6 +94,30 @@ def test_job_link_releases_every_cache(spark, tmp_path, no_cache):
 
     jobs.job_link(spark, Args())
     assert spark.read.parquet(Args.out).count() == 3
+    assert _nothing_cached(spark)
+
+
+def test_job_cluster_releases_every_cache(spark, tmp_path, monkeypatch, no_cache):
+    """The self-link releases its chain's caches and the parsed records,
+    also when clustering raises."""
+    from recordlinker_spark.operators import cluster
+
+    docs_dir = str(tmp_path / "docs")
+    _docs(spark, SIX_PATIENTS).write.parquet(docs_dir)
+
+    class Args:
+        documents, out, labels = docs_dir, str(tmp_path / "labels"), None
+
+    jobs.job_cluster(spark, Args())
+    assert spark.read.parquet(Args.out).count() == 6
+    assert _nothing_cached(spark)
+
+    def failing_assign(*_a, **_k):
+        raise RuntimeError("clustering failed")
+
+    monkeypatch.setattr(cluster, "assign_persons", failing_assign)
+    with pytest.raises(RuntimeError, match="clustering failed"):
+        jobs.job_cluster(spark, Args())
     assert _nothing_cached(spark)
 
 
